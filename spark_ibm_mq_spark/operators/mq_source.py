@@ -167,13 +167,10 @@ def mq_source_stream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # availableNow processes the one prefetched batch per run; loop restarts
     # from the checkpoint until the cursor has covered the queue. The
-    # covered-the-queue check reads the query's OWN progress counters
+    # covered-the-queue check reads the query's own progress counters
     # (rows the source handed to committed micro-batches) instead of
-    # re-scanning the parquet sink — the old count() re-opened and counted
-    # the whole sink once per iteration, a full extra pass of everything
-    # drained so far (r17 opt, guide §1/§5: don't re-read what the driver
-    # already knows; decomposition in scripts/decompose_mq_drains.py timed
-    # the per-iteration count at ~1 s of the drain's ~5 s).
+    # re-counting the parquet sink, which would re-read everything drained
+    # so far once per iteration.
     drained_rows = 0
     for _ in range(8):
         q = (
@@ -188,6 +185,9 @@ def mq_source_stream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         drained_rows += sum(int(p["numInputRows"]) for p in q.recentProgress)
         if drained_rows >= total:
             break
+    # a loop that ran out of restarts, or rows counted twice, fails loudly
+    # rather than returning a short or padded sink
+    assert drained_rows == total, f"stream drain read {drained_rows} of {total} rows"
     return spark.read.parquet(out)
 
 
@@ -240,15 +240,14 @@ def mq_source_destructive_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         if drained:  # extra cycle: sentinel batch construction acks the rest
             break
-        # covered-the-queue via the query's own progress counters — same
-        # replacement as mq_source_stream_drain (no per-iteration re-scan
-        # of the sink); the final assert below still checks the BROKER's
-        # acked/depth state, so the destructive-semantics witness is
-        # unchanged.
+        # covered-the-queue via the query's own progress counters, as in
+        # mq_source_stream_drain; the asserts below also check the broker's
+        # acked/depth state, which witnesses the destructive semantics
         drained_rows += sum(int(p["numInputRows"]) for p in q.recentProgress)
         if drained_rows >= total:
             drained = True
             broker.put(9_999_999_999_999, 0, sentinel)
+    assert drained_rows == total, f"destructive drain read {drained_rows} of {total} rows"
     assert broker.acked() == total and broker.depth() == 1, (
         f"destructive drain left acked={broker.acked()} depth={broker.depth()} "
         f"of {total} (+1 sentinel)"

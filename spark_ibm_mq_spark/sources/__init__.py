@@ -1,9 +1,5 @@
 """Sources: the `ibmmq` DataSource (Python Data Source API) and the
-file-backed fake MQ broker used for tests and driver checks.
-
-The real-broker adapter (pymqi) is an optional drop-in behind the same
-`MQClient` interface; this container has no broker, so the fake is the
-default provider (SURVEY.md §5.2 item 3).
+file-backed fake MQ broker it reads from (SURVEY.md §5.2 item 3).
 """
 
 from spark_ibm_mq_spark.sources.fake_mq import FakeMQBroker

@@ -34,12 +34,32 @@ Semantics:
 from __future__ import annotations
 
 import base64
+import itertools
 import json
 import os
 from collections.abc import Iterable
 
 
 class FakeMQBroker:
+    """A file-backed queue manager exposing the calls the `ibmmq` source and
+    `MQWritebackSink` make: ``message_block(from_pos, limit, byte_off)``,
+    ``put_ms_index_with_offsets(from_pos)``, ``ack(upto_pos)``,
+    ``acked()``, ``depth()``, ``get_inhibited()`` and ``put_all(messages)``.
+    A client for a live queue manager would implement the same calls:
+
+    - connect with MQCSP auth              ↔ IBMMQReceiver.java:403-415
+    - browse cursor (MQOO_BROWSE, BROWSE_FIRST/NEXT) == ``from_pos``;
+      destructive get                      ↔ IBMMQReceiver.java:131-136,203-211
+    - MQGMO_SYNCPOINT gets; ``ack(upto)`` == qmgr.commit(), a failed
+      batch == backout                     ↔ IBMMQReceiver.java:349-393
+    - CCSID conversion via MQGMO_CONVERT   ↔ IBMMQReceiver.java:204,242-244
+    - ``depth()`` == MQIA_CURRENT_Q_DEPTH; ``get_inhibited()`` ==
+      MQIA_INHIBIT_GET
+
+    A message exists once its trailing newline is written: every read stops
+    at the last ``\n``, so a reader racing a producer never sees a
+    half-appended line."""
+
     def __init__(self, path: str, queue: str = "DEV.QUEUE.1") -> None:
         self.path = path
         self.queue = queue
@@ -49,15 +69,22 @@ class FakeMQBroker:
     def _f(self, suffix: str) -> str:
         return os.path.join(self.path, f"{self.queue}.{suffix}")
 
+    def _check_connection(self) -> None:
+        if self.connection_broken():
+            raise ConnectionError(f"fake MQ: connection to {self.queue} is down")
+
+    def _read_complete(self) -> bytes:
+        """The whole queue file up to its last newline."""
+        try:
+            with open(self._f("jsonl"), "rb") as f:
+                data = f.read()
+        except FileNotFoundError:
+            return b""
+        return data[: data.rfind(b"\n") + 1]
+
     # ---- producer side ----
     def put(self, put_ms: int, seq_no: int, body: str | bytes) -> None:
-        rec: dict = {"put_ms": int(put_ms), "seq_no": int(seq_no)}
-        if isinstance(body, bytes):
-            rec["body_b64"] = base64.b64encode(body).decode("ascii")
-        else:
-            rec["body"] = body
-        with open(self._f("jsonl"), "a", encoding="utf-8") as f:
-            f.write(json.dumps(rec) + "\n")
+        self.put_all([(put_ms, seq_no, body)])
 
     def put_all(self, messages: Iterable[tuple[int, int, str | bytes]]) -> None:
         with open(self._f("jsonl"), "a", encoding="utf-8") as f:
@@ -71,101 +98,54 @@ class FakeMQBroker:
 
     # ---- consumer side ----
     def messages(self, from_pos: int, limit: int | None = None) -> list[dict]:
-        """Browse from an absolute queue position (line number). Destructive
-        consumers pass from_pos >= acked()."""
-        if self.connection_broken():
-            raise ConnectionError(f"fake MQ: connection to {self.queue} is down")
-        out: list[dict] = []
-        qfile = self._f("jsonl")
-        if not os.path.exists(qfile):
-            return out
-        with open(qfile, encoding="utf-8") as f:
-            for i, line in enumerate(f):
-                if i < from_pos:
-                    continue
-                if limit is not None and len(out) >= limit:
-                    break
-                out.append(json.loads(line))
-        return out
+        """`message_block` parsed into one dict per message."""
+        return [json.loads(line) for line in self.message_block(from_pos, limit).splitlines()]
 
     def message_block(
         self, from_pos: int, limit: int | None = None, byte_off: int | None = None
     ) -> bytes:
-        """The same slice `messages()` returns, as the RAW newline-delimited
-        JSON bytes — no per-line json.loads. The batch reader feeds this
-        straight to pyarrow's C++ JSON parser (one columnar parse of the
-        whole slice beats 10k+ Python dict materializations ~10×); the
-        line-oriented layout makes byte slice == message slice. When the
-        planner supplies ``byte_off`` (from `put_ms_index`'s offset scan),
-        the read SEEKS there instead of skipping ``from_pos`` lines — each
-        split costs O(its slice), not O(queue prefix), so N parallel splits
-        read the queue once total rather than N/2 times."""
-        if self.connection_broken():
-            raise ConnectionError(f"fake MQ: connection to {self.queue} is down")
-        qfile = self._f("jsonl")
-        if not os.path.exists(qfile):
+        """Up to ``limit`` messages from queue position ``from_pos`` (a line
+        number; destructive consumers pass ``from_pos >= acked()``) as raw
+        newline-delimited JSON, which the source parses in one columnar
+        pass. When the planner supplies ``byte_off`` (from
+        `put_ms_index_with_offsets`), the read seeks there instead of
+        skipping ``from_pos`` lines, so each batch split costs O(its slice)
+        rather than O(queue prefix)."""
+        self._check_connection()
+        try:
+            f = open(self._f("jsonl"), "rb")
+        except FileNotFoundError:
             return b""
-        out: list[bytes] = []
-        with open(qfile, "rb") as f:
-            if byte_off is not None:
-                f.seek(byte_off)
-                for line in f:
-                    if limit is not None and len(out) >= limit:
-                        break
-                    out.append(line)
+        with f:
+            if byte_off is None:
+                stop = None if limit is None else from_pos + limit
+                block = b"".join(itertools.islice(f, from_pos, stop))
             else:
-                for i, line in enumerate(f):
-                    if i < from_pos:
-                        continue
-                    if limit is not None and len(out) >= limit:
-                        break
-                    out.append(line)
-        return b"".join(out)
-
-    def put_ms_index(self, from_pos: int) -> list[int]:
-        """Metadata-only scan: the put_ms of every message from ``from_pos``
-        on, WITHOUT body decode or full JSON parse — used by the batch
-        reader to plan put_ms-boundary splits driver-side. put()/put_all()
-        always write ``put_ms`` as the first field, so a string slice
-        suffices; any line that doesn't match falls back to json.loads."""
-        return self.put_ms_index_with_offsets(from_pos)[0]
+                f.seek(byte_off)
+                block = b"".join(itertools.islice(f, limit))
+        return block[: block.rfind(b"\n") + 1]
 
     def put_ms_index_with_offsets(
         self, from_pos: int
     ) -> tuple[list[int], list[int]]:
-        """`put_ms_index` plus each message's BYTE offset in the queue file,
-        so the planner can hand splits a seek position (see
-        `message_block`)."""
-        if self.connection_broken():
-            raise ConnectionError(f"fake MQ: connection to {self.queue} is down")
-        qfile = self._f("jsonl")
-        if not os.path.exists(qfile):
-            return [], []
-        with open(qfile, "rb") as f:
-            data = f.read()
+        """The put_ms and byte offset of every message from ``from_pos``
+        on: the batch planner cuts splits at put_ms changes and hands each
+        split a seek position (see `message_block`). Bodies are not
+        decoded: one numpy newline scan gives the offsets and one pyarrow
+        JSON parse restricted to ``put_ms`` gives the timestamps, with no
+        per-line Python, since the planner runs this once per batch job."""
+        self._check_connection()
+        data = self._read_complete()
         if not data:
             return [], []
-        # Vectorized metadata scan (the planner runs this per batch job, so
-        # it sits on the fixed-cost path the 50k-msg drain is bound by):
-        # newline offsets via one numpy byte scan, put_ms values via one
-        # pyarrow C++ JSON parse restricted to the put_ms field — no
-        # per-line Python. ~8× the old find()-per-line loop at 50k msgs.
         import io
 
         import numpy as np
         import pyarrow as pa
         import pyarrow.json as pj
 
-        arr = np.frombuffer(data, dtype=np.uint8)
-        nl = np.flatnonzero(arr == 0x0A)
-        if len(nl) == 0:  # single unterminated line
-            starts = np.zeros(1, dtype=np.int64)
-        else:
-            starts = np.empty(len(nl), dtype=np.int64)
-            starts[0] = 0
-            starts[1:] = nl[:-1] + 1
-            if nl[-1] != len(data) - 1:  # unterminated trailing line
-                starts = np.append(starts, nl[-1] + 1)
+        nl = np.flatnonzero(np.frombuffer(data, dtype=np.uint8) == 0x0A)
+        starts = np.concatenate(([0], nl[:-1] + 1))
         parsed = pj.read_json(
             io.BytesIO(data),
             parse_options=pj.ParseOptions(
@@ -174,10 +154,10 @@ class FakeMQBroker:
             ),
         )
         col = parsed["put_ms"].combine_chunks()
-        # Fail loudly on any broker-file anomaly (ADVICE r9): a blank line or
-        # a record missing put_ms desyncs the newline-offset array from the
-        # pyarrow record parse (and to_numpy on a null int64 raises a far
-        # less diagnosable ArrowInvalid downstream). Cheap O(1)/O(n) checks.
+        # A blank line or a record without put_ms would desync the offsets
+        # from the parsed records (and a null put_ms fails later with a far
+        # less readable ArrowInvalid), so both fail here, loudly.
+        qfile = self._f("jsonl")
         if col.null_count:
             raise ValueError(
                 f"fake MQ: {col.null_count} record(s) in {qfile} missing put_ms"
@@ -224,12 +204,7 @@ class FakeMQBroker:
     # ---- queue state ----
     def depth(self) -> int:
         """Current queue depth (total puts − destructive consumes)."""
-        qfile = self._f("jsonl")
-        if not os.path.exists(qfile):
-            return 0
-        with open(qfile, encoding="utf-8") as f:
-            total = sum(1 for _ in f)
-        return total - self.acked()
+        return self._read_complete().count(b"\n") - self.acked()
 
     def get_inhibited(self) -> bool:
         return os.path.exists(self._f("inhibit"))
@@ -248,13 +223,3 @@ class FakeMQBroker:
             open(self._f("fail"), "w").close()
         elif os.path.exists(self._f("fail")):
             os.remove(self._f("fail"))
-
-    # ---- telemetry (reference R14, IBMMQReceiver.java:481-522) ----
-    def stats(self) -> dict:
-        return {
-            "queue": self.queue,
-            "depth": self.depth(),
-            "acked": self.acked(),
-            "get_inhibited": self.get_inhibited(),
-            "connection_broken": self.connection_broken(),
-        }

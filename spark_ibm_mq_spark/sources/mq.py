@@ -36,16 +36,18 @@ Deterministic replay: the synthesized-seq state (last_ms, last_seq) is part
 of the offset JSON, so a replayed batch mints identical keys (SURVEY.md §7
 "hard parts" — this is what keeps exactly-once dedup sound across restarts).
 
-`provider=fake` (default) uses the file-backed FakeMQBroker; a real
-`pymqi`-backed client would plug in behind the same handful of calls
-(messages/ack/depth/inhibited), import-gated since no broker exists here.
+Every read (stream `read`, replay `readBetweenOffsets`, batch `read`) goes
+through `read_block`: one broker fetch under the one reconnect policy
+(`_with_reconnect`), then one arrow parse. The broker is the file-backed
+FakeMQBroker, whose docstring lists the calls a live-broker client would
+implement.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import time
-from datetime import datetime, timezone
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -69,81 +71,48 @@ def repair_seq(put_ms: int, raw_seq: int, last_ms: int, last_seq: int) -> int:
     return raw_seq
 
 
-def vectorized_repair_seq(put_ms, raw_seq):
-    """Closed-form batch equivalent of chaining `repair_seq` over a slice
-    seeded with (last_ms=0, last_seq=0) — the exact state every put_ms
-    boundary split starts from (see `plan_splits`).
-
-    Derivation: position i is a RESET when its chain restarts — the put_ms
-    changed (repair never consults the previous message across a timestamp
-    change) or the raw seq is not the reset-to-1 sentinel (a genuine MQ
-    group seq is kept verbatim and subsequent collisions count up from it).
-    Between resets, each raw_seq==1 message increments by one. So with r =
-    index of the nearest reset at-or-before i (a running maximum),
-    seq[i] = raw_seq[r] + (i - r) — three numpy passes, no Python loop,
-    bit-identical to the serial chain (property-tested against it)."""
-    import numpy as np
-
-    n = len(put_ms)
-    if n == 0:
-        return np.empty(0, dtype="int64")
-    idx = np.arange(n, dtype="int64")
-    reset = np.empty(n, dtype=bool)
-    reset[0] = True
-    np.not_equal(put_ms[1:], put_ms[:-1], out=reset[1:])
-    reset[1:] |= raw_seq[1:] != 1
-    last_reset = np.maximum.accumulate(np.where(reset, idx, 0))
-    return raw_seq[last_reset] + (idx - last_reset)
-
-
-def _rows_from_messages(
-    msgs: list[dict], queue: str, encoding: str, last_ms: int, last_seq: int
-) -> tuple[list[tuple], int, int]:
-    rows: list[tuple] = []
-    for rec in msgs:
-        put_ms = int(rec["put_ms"])
-        seq = repair_seq(put_ms, int(rec["seq_no"]), last_ms, last_seq)
-        body = FakeMQBroker.decode_body(rec, encoding)
-        put_ts = datetime.fromtimestamp(put_ms / 1000.0, tz=timezone.utc).replace(tzinfo=None)
-        rows.append((f"{put_ms}_{seq}", body, put_ts, seq, queue))
-        last_ms, last_seq = put_ms, seq
-    return rows, last_ms, last_seq
-
-
 def seeded_repair_seq(put_ms, raw_seq, last_ms: int, last_seq: int):
-    """`vectorized_repair_seq` generalized to an arbitrary carry-in state
-    (the stream reader's offset carries (last_ms, last_seq) across
-    batches; the batch reader's splits always seed (0, 0)).
+    """Closed-form batch equivalent of chaining `repair_seq` over a slice
+    from the carry-in state (last_ms, last_seq): the stream offset's state,
+    or (0, 0) at a batch split's put_ms boundary (see `plan_splits`).
 
-    The serial rule consults exactly one previous message, so prepending
-    the carry-in as a VIRTUAL row makes the closed-form pass reproduce the
-    seeded chain bit-identically: row 1's reset test compares against the
-    virtual row's put_ms, and a non-reset run anchored at the virtual row
-    counts up from last_seq — precisely `repair_seq`'s two branches.
+    The carry-in becomes a virtual row 0. Row i is a RESET when its chain
+    restarts: the put_ms changed (repair never consults the previous
+    message across a timestamp change) or the raw seq is not the
+    reset-to-1 sentinel (a genuine MQ group seq is kept verbatim and later
+    collisions count up from it). Between resets each raw_seq==1 message
+    increments by one, so with r = the nearest reset at or before i (a
+    running maximum), seq[i] = raw_seq[r] + (i - r). The virtual row is
+    always a reset, so a run anchored at it counts up from last_seq:
+    precisely `repair_seq`'s two branches, with no Python loop.
     Property-tested against the serial chain in test_mq_source.py."""
     import numpy as np
 
     pm = np.concatenate((np.asarray([last_ms], dtype="int64"), put_ms))
     rs = np.concatenate((np.asarray([last_seq], dtype="int64"), raw_seq))
-    return vectorized_repair_seq(pm, rs)[1:]
+    idx = np.arange(len(pm), dtype="int64")
+    reset = np.empty(len(pm), dtype=bool)
+    reset[0] = True
+    np.not_equal(pm[1:], pm[:-1], out=reset[1:])
+    reset[1:] |= rs[1:] != 1
+    last_reset = np.maximum.accumulate(np.where(reset, idx, 0))
+    return (rs[last_reset] + (idx - last_reset))[1:]
 
 
 def arrow_batch_from_block(
     block: bytes, queue: str, encoding: str, last_ms: int, last_seq: int
 ):
-    """One columnar pass from raw broker bytes to a pyarrow RecordBatch —
-    the shared fast path of BOTH the batch reader and (since r17) the
-    stream reader: pyarrow's C++ JSON reader parses the whole line block
-    (no per-message Python dicts), the seq-collision repair runs as the
-    closed-form numpy pass, and the key column is an arrow binary_join —
-    no per-row Python on the common text-body path (guide §4: the
-    streaming boundary previously materialized 100k Python tuples that
-    Spark then converted FIELD BY FIELD to arrow on the driver; yielding
-    RecordBatches skips both loops).
+    """One columnar pass from raw broker bytes to a pyarrow RecordBatch:
+    pyarrow's C++ JSON reader parses the whole line block (no per-message
+    Python dicts), the seq-collision repair runs as the closed-form numpy
+    pass, and the key column is an arrow binary_join, so the common
+    text-body path has no per-row Python. Spark takes the RecordBatch onto
+    its arrow stream as is, instead of converting Python rows field by
+    field.
 
-    Returns (batch, last_ms, last_seq) — the carry-out repair state the
-    stream reader stores in its end offset — or (None, last_ms, last_seq)
-    for an empty block."""
+    Returns (batch, last_ms, last_seq), the carry-out repair state the
+    stream reader stores in its end offset, or (None, last_ms, last_seq)
+    for a block with no messages."""
     import io
 
     import pyarrow as pa
@@ -166,6 +135,8 @@ def arrow_batch_from_block(
             unexpected_field_behavior="ignore",
         ),
     )
+    if not parsed.num_rows:
+        return None, last_ms, last_seq
     put_ms = parsed["put_ms"].combine_chunks().to_numpy()
     seq = seeded_repair_seq(
         put_ms, parsed["seq_no"].combine_chunks().to_numpy(), last_ms, last_seq
@@ -272,36 +243,37 @@ class _Options:
         return FakeMQBroker(self.path, self.queue)
 
 
-def _fetch_with_reconnect(opts: _Options, broker: FakeMQBroker, from_pos: int, limit: int):
-    """R12: on broken connection, back off and retry before surfacing the
-    error to Spark (which then restarts the micro-batch from the checkpoint,
-    the R13 path)."""
-    attempts = 0
-    while True:
+def _with_reconnect(opts: _Options, call):
+    """Run one broker call under the reconnect policy: on a broken
+    connection, wait `reconnectWaitMs` and retry, up to `maxReconnects`
+    times, then raise to Spark, which restarts the micro-batch from the
+    checkpoint. The reference retries the same way with a fixed 600 s wait
+    (IBMMQReceiver.java:154-198)."""
+    for attempt in itertools.count(1):
         try:
-            return broker.messages(from_pos, limit)
+            return call()
         except ConnectionError:
-            attempts += 1
-            if attempts > opts.max_reconnects:
+            if attempt > opts.max_reconnects:
                 raise
             time.sleep(opts.reconnect_wait_s)
 
 
-def _block_with_reconnect(
-    opts: _Options, broker: FakeMQBroker, from_pos: int, limit: int
-) -> bytes:
-    """`message_block` under the same reconnect/backoff policy as
-    `_fetch_with_reconnect` — the raw-bytes fetch the arrow stream path
-    uses."""
-    attempts = 0
-    while True:
-        try:
-            return broker.message_block(from_pos, limit)
-        except ConnectionError:
-            attempts += 1
-            if attempts > opts.max_reconnects:
-                raise
-            time.sleep(opts.reconnect_wait_s)
+def read_block(
+    opts: _Options,
+    pos: int,
+    limit: int,
+    last_ms: int,
+    last_seq: int,
+    byte_off: int | None = None,
+):
+    """The one broker read path: up to ``limit`` messages from queue
+    position ``pos`` (or byte offset ``byte_off``), parsed with the repair
+    chain seeded from (last_ms, last_seq). Live reads and replays share it,
+    so a replayed range mints byte-identical keys. Returns what
+    `arrow_batch_from_block` returns."""
+    broker = opts.broker()
+    block = _with_reconnect(opts, lambda: broker.message_block(pos, limit, byte_off))
+    return arrow_batch_from_block(block, opts.queue, opts.encoding, last_ms, last_seq)
 
 
 class MQSplit(InputPartition):
@@ -368,49 +340,25 @@ class MQBatchReader(DataSourceReader):
         self._max_splits = int(options.get("maxbatchpartitions", "64"))
 
     def partitions(self):
-        opts = self.opts
-        broker = opts.broker()
+        broker = self.opts.broker()
         start = broker.acked()
-        attempts = 0
-        while True:
-            try:
-                ms, offs = broker.put_ms_index_with_offsets(start)
-                break
-            except ConnectionError:
-                attempts += 1
-                if attempts > opts.max_reconnects:
-                    raise
-                time.sleep(opts.reconnect_wait_s)
+        ms, offs = _with_reconnect(
+            self.opts, lambda: broker.put_ms_index_with_offsets(start)
+        )
         splits = plan_splits(ms, self._split_rows, self._max_splits)
         if not splits:
             return [MQSplit(start, 0)]
         return [MQSplit(start + off, cnt, offs[off]) for off, cnt in splits]
 
     def read(self, partition: MQSplit):
-        """Emits pyarrow RecordBatches (Spark 4 arrow path for Python data
-        sources) via the shared `arrow_batch_from_block` columnar pass —
-        ~10× the old per-record loop on the 50k-message bench; the
-        CCSID/body_b64 decode path drops to Python only for the rows that
-        actually carry bytes. Seq state seeds to zero: the slice starts at
-        a put_ms boundary, where the repair chain has no carry-over by
-        construction."""
-        opts = self.opts
-        broker = opts.broker()
+        """Emits one pyarrow RecordBatch for the split. Seq state seeds to
+        zero: the slice starts at a put_ms boundary, where the repair chain
+        has no carry-over by construction."""
         if partition.count <= 0:
             return
-        attempts = 0
-        while True:
-            try:
-                block = broker.message_block(
-                    partition.from_pos, partition.count, partition.byte_off
-                )
-                break
-            except ConnectionError:
-                attempts += 1
-                if attempts > opts.max_reconnects:
-                    raise
-                time.sleep(opts.reconnect_wait_s)
-        batch, _, _ = arrow_batch_from_block(block, opts.queue, opts.encoding, 0, 0)
+        batch, _, _ = read_block(
+            self.opts, partition.from_pos, partition.count, 0, 0, partition.byte_off
+        )
         if batch is not None:
             yield batch
 
@@ -427,34 +375,23 @@ class MQSimpleStreamReader(SimpleDataSourceStreamReader):
         start = self.opts.broker().acked() if not self.opts.keep_messages else 0
         return {"pos": start, "last_ms": 0, "last_seq": 0}
 
-    def _paused(self, broker: FakeMQBroker) -> bool:
-        # R9 halt file + R10 GET-inhibited ⇒ produce empty batches
+    def _paused(self) -> bool:
+        # the halt file and GET-inhibited both pause the stream: empty
+        # batches, nothing read
         if self.opts.halt_file and os.path.exists(self.opts.halt_file):
             return True
-        return broker.get_inhibited()
+        return self.opts.broker().get_inhibited()
 
     def read(self, start: dict) -> tuple:
-        """One prefetched micro-batch as a SINGLE pyarrow RecordBatch.
-
-        Spark's simple-reader wrapper accepts RecordBatch elements from
-        this iterator (records_to_arrow_batches yields them straight onto
-        the arrow stream), so the whole batch crosses the Python boundary
-        as one columnar block instead of max_per_batch pickled tuples that
-        the driver would re-convert to arrow FIELD BY FIELD (r17 opt,
-        guide §4 — decomposition in scripts/decompose_mq_drains.py: the
-        tuple path spent ~0.8 s/100k msgs in json.loads + the per-row
-        repair/decode/datetime loop before that conversion even began).
-        Values, keys, and the repair chain are bit-identical to the old
-        row loop (seeded_repair_seq property-test), and the offset JSON
-        is unchanged, so replay determinism and every downstream oracle
-        hold."""
-        opts = self.opts
-        broker = opts.broker()
-        if self._paused(broker):
+        """One prefetched micro-batch as a single pyarrow RecordBatch,
+        which Spark's simple-reader wrapper passes straight onto its arrow
+        stream. The end offset advances by the rows parsed and carries the
+        repair state out."""
+        if self._paused():
             return iter([]), dict(start)
-        block = _block_with_reconnect(opts, broker, start["pos"], opts.max_per_batch)
-        batch, last_ms, last_seq = arrow_batch_from_block(
-            block, opts.queue, opts.encoding, start["last_ms"], start["last_seq"]
+        batch, last_ms, last_seq = read_block(
+            self.opts, start["pos"], self.opts.max_per_batch,
+            start["last_ms"], start["last_seq"],
         )
         if batch is None:
             return iter([]), dict(start)
@@ -466,22 +403,20 @@ class MQSimpleStreamReader(SimpleDataSourceStreamReader):
         return iter([batch]), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        """Replay path (query restart): same arrow block pass, seeded with
-        the START offset's repair state — byte-identical keys to the
-        original read (the deterministic-replay contract)."""
-        opts = self.opts
-        broker = opts.broker()
+        """Replay path (query restart): the same read as `read`, seeded
+        with the START offset's repair state, so the keys are
+        byte-identical to the original read (the deterministic-replay
+        contract)."""
         n = end["pos"] - start["pos"]
         if n <= 0:
             return iter([])
-        block = _block_with_reconnect(opts, broker, start["pos"], n)
-        batch, _, _ = arrow_batch_from_block(
-            block, opts.queue, opts.encoding, start["last_ms"], start["last_seq"]
+        batch, _, _ = read_block(
+            self.opts, start["pos"], n, start["last_ms"], start["last_seq"]
         )
         return iter([] if batch is None else [batch])
 
     def commit(self, end: dict) -> None:
-        # Commit-after-durable (R7): Spark has persisted `end` to the offset
+        # Commit-after-durable: Spark has persisted `end` to the offset
         # log before calling this; acking MQ now means a crash in between
         # redelivers (at-least-once), never loses. Browse mode never acks.
         if not self.opts.keep_messages:

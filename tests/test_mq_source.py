@@ -10,11 +10,16 @@ import threading
 import time
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from spark_ibm_mq_spark.sources import FakeMQBroker, register_ibmmq
-from spark_ibm_mq_spark.sources.mq import _fetch_with_reconnect, _Options, repair_seq
+from spark_ibm_mq_spark.sources.mq import (
+    MQBatchReader,
+    MQSimpleStreamReader,
+    arrow_batch_from_block,
+    repair_seq,
+)
 
 
 @pytest.fixture()
@@ -79,7 +84,7 @@ def test_vectorized_repair_matches_serial_chain(stream):
     the exactness claim `plan_splits` relies on."""
     import numpy as np
 
-    from spark_ibm_mq_spark.sources.mq import vectorized_repair_seq
+    from spark_ibm_mq_spark.sources.mq import seeded_repair_seq
 
     ts_sorted = sorted(ms for ms, _ in stream)
     seqs = [s for _, s in stream]
@@ -88,8 +93,8 @@ def test_vectorized_repair_matches_serial_chain(stream):
         seq = repair_seq(put_ms, raw_seq, last_ms, last_seq)
         serial.append(seq)
         last_ms, last_seq = put_ms, seq
-    vec = vectorized_repair_seq(
-        np.array(ts_sorted, dtype="int64"), np.array(seqs, dtype="int64")
+    vec = seeded_repair_seq(
+        np.array(ts_sorted, dtype="int64"), np.array(seqs, dtype="int64"), 0, 0
     )
     assert list(vec) == serial
 
@@ -292,38 +297,56 @@ def test_stream_get_inhibited_pauses(spark, broker, tmp_path):
 # ------------------------------------------------------------------- reconnect
 
 
-def test_reconnect_retries_then_raises(broker):
+def _stream_read(opts):
+    r = MQSimpleStreamReader(opts)
+    start = r.initialOffset()
+    return lambda: r.read(start)[1]["pos"]
+
+
+def _batch_partitions(opts):
+    r = MQBatchReader(opts)
+    return lambda: sum(p.count for p in r.partitions())
+
+
+def _batch_read(opts):
+    r = MQBatchReader(opts)
+    (split,) = r.partitions()
+    return lambda: sum(b.num_rows for b in r.read(split))
+
+
+@pytest.mark.parametrize(
+    "call_site",
+    [_stream_read, _batch_partitions, _batch_read],
+    ids=["stream_read", "batch_partitions", "batch_read"],
+)
+def test_reader_reconnect(broker, call_site):
+    """Every production broker call backs off and retries on a broken
+    connection: it raises ConnectionError once `maxReconnects` retries are
+    spent, and recovers when the connection returns mid-retry. Each call is
+    planned while the connection is up; its message count is returned."""
     broker.put(1000, 1, "m")
+    base = {"path": broker.path, "queue": broker.queue}
+    give_up = call_site(dict(base, reconnectwaitms="10", maxreconnects="2"))
+    recover = call_site(dict(base, reconnectwaitms="50", maxreconnects="20"))
     broker.set_connection_broken(True)
-    opts = _Options({"path": broker.path, "queue": broker.queue,
-                     "reconnectwaitms": "10", "maxreconnects": "2"})
     t0 = time.monotonic()
     with pytest.raises(ConnectionError):
-        _fetch_with_reconnect(opts, broker, 0, None)
-    assert time.monotonic() - t0 >= 0.02  # backed off between attempts (R12)
-
-
-def test_reconnect_recovers_mid_retry(broker):
-    broker.put(1000, 1, "m")
-    broker.set_connection_broken(True)
-    opts = _Options({"path": broker.path, "queue": broker.queue,
-                     "reconnectwaitms": "50", "maxreconnects": "20"})
+        give_up()
+    assert time.monotonic() - t0 >= 0.02  # backed off between attempts
     t = threading.Timer(0.15, broker.set_connection_broken, args=(False,))
     t.start()
     try:
-        msgs = _fetch_with_reconnect(opts, broker, 0, None)
+        assert recover() == 1
     finally:
         t.cancel()
-    assert [m["body"] for m in msgs] == ["m"]
 
 
 # ------------------------------------------------------------------- replay
 
 
 def _flatten_stream(it) -> list[tuple]:
-    """Row tuples from the stream reader's iterator — since r17 it yields
-    pyarrow RecordBatches (the documented fast path of Spark's
-    records_to_arrow_batches); flatten for value-level assertions."""
+    """Row tuples from the stream reader's iterator, which yields pyarrow
+    RecordBatches; flattened for value-level assertions."""
     rows: list[tuple] = []
     for el in it:
         rows.extend(tuple(r.values()) for r in el.to_pylist())
@@ -333,8 +356,6 @@ def _flatten_stream(it) -> list[tuple]:
 def test_read_between_offsets_deterministic(broker):
     """Replayed ranges mint identical keys because collision-repair state
     lives in the offset (SURVEY.md §7 hard-parts)."""
-    from spark_ibm_mq_spark.sources.mq import MQSimpleStreamReader
-
     broker.put_all([(1000, 1, "a"), (1000, 1, "b"), (1000, 1, "c"), (2000, 1, "d")])
     r = MQSimpleStreamReader({"path": broker.path, "queue": broker.queue})
     start = r.initialOffset()
@@ -344,20 +365,54 @@ def test_read_between_offsets_deterministic(broker):
     assert rows1 == rows2
     assert [x[0] for x in rows1] == ["1000_1", "1000_2", "1000_3", "2000_1"]
     assert end == {"pos": 4, "last_ms": 2000, "last_seq": 1}
+    # a block with no messages leaves the carry state as it was
+    for block in (b"", b"\n"):
+        assert arrow_batch_from_block(block, "Q", "utf-8", 2000, 1) == (None, 2000, 1)
+
+
+def test_torn_tail_is_read_once_complete(broker):
+    """A message counts only once its newline is written: a half-appended
+    last line is invisible to the stream read, the batch planner and the
+    batch read, and the stream picks it up, with the serial-chain key, once
+    the line is finished."""
+    broker.put_all([(1000, 1, "a"), (1000, 1, "b")])
+    tail = b'{"put_ms": 1000, "seq_no": 1, "body": "c"}\n'
+    with open(broker._f("jsonl"), "ab") as f:
+        f.write(tail[:20])
+    opts = {"path": broker.path, "queue": broker.queue}
+    stream = MQSimpleStreamReader(opts)
+    it, end = stream.read(stream.initialOffset())
+    assert [x[0] for x in _flatten_stream(it)] == ["1000_1", "1000_2"]
+    assert end == {"pos": 2, "last_ms": 1000, "last_seq": 2}
+    batch = MQBatchReader(opts)
+    parts = batch.partitions()
+    assert sum(p.count for p in parts) == 2
+    keys = [k for p in parts for b in batch.read(p) for k in b.column("key").to_pylist()]
+    assert keys == ["1000_1", "1000_2"]
+    assert broker.depth() == 2
+    with open(broker._f("jsonl"), "ab") as f:
+        f.write(tail[20:])
+    it, end = stream.read(end)
+    assert [x[0] for x in _flatten_stream(it)] == ["1000_3"]
+    assert end == {"pos": 3, "last_ms": 1000, "last_seq": 3}
 
 
 @given(
     stream=st.lists(
-        st.tuples(st.integers(0, 5), st.integers(1, 3)), min_size=0, max_size=40
+        st.tuples(st.integers(0, 50), st.integers(1, 3)), min_size=0, max_size=200
     ),
     seed_ms=st.integers(0, 5),
     seed_seq=st.integers(0, 6),
 )
+@example(stream=[], seed_ms=0, seed_seq=0)
+@example(stream=[(1, 1), (1, 1), (1, 2), (1, 1), (2, 1), (2, 3)], seed_ms=0, seed_seq=0)
+@example(stream=[(3, 1), (3, 1), (4, 1)], seed_ms=3, seed_seq=5)
 @settings(max_examples=200, deadline=None)
 def test_seeded_repair_matches_serial_chain(stream, seed_ms, seed_seq):
-    """The stream reader's arrow path repairs from an ARBITRARY carry-in
-    (last_ms, last_seq) — the offset state — and must chain bit-identically
-    to the serial rule from that seed (r17: the virtual-row closed form)."""
+    """The closed-form repair must chain bit-identically to the serial rule
+    from any carry-in (last_ms, last_seq): the stream offset's state, and
+    the (0, 0) seed every put_ms-boundary batch split starts from, which is
+    the exactness claim `plan_splits` relies on."""
     import numpy as np
 
     from spark_ibm_mq_spark.sources.mq import seeded_repair_seq
