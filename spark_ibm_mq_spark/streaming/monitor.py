@@ -13,6 +13,16 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+# Phases of a batch's ``durationMs`` kept beside ``triggerExecution``, so a
+# slow batch shows which step (source offsets, offset WAL, the sink, the
+# commit log) took its time; a phase a batch did not run reads 0.
+_PHASE_COLUMNS = {
+    "latestOffset": "latest_offset_ms",
+    "walCommit": "wal_commit_ms",
+    "addBatch": "add_batch_ms",
+    "commitOffsets": "commit_offsets_ms",
+}
+
 
 class MQTelemetryListener(StreamingQueryListener):
     """Collects per-batch progress: rows/sec, batch duration, input rows —
@@ -29,6 +39,7 @@ class MQTelemetryListener(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:
         p = json.loads(event.progress.json)
+        durations = p.get("durationMs") or {}
         self.progress.append(
             {
                 "query_id": p.get("id"),
@@ -36,9 +47,8 @@ class MQTelemetryListener(StreamingQueryListener):
                 "num_input_rows": p.get("numInputRows", 0),
                 "input_rows_per_sec": float(p.get("inputRowsPerSecond") or 0.0),
                 "processed_rows_per_sec": float(p.get("processedRowsPerSecond") or 0.0),
-                "batch_duration_ms": int(
-                    (p.get("durationMs") or {}).get("triggerExecution", 0)
-                ),
+                "batch_duration_ms": int(durations.get("triggerExecution", 0)),
+                **{col: int(durations.get(k, 0)) for k, col in _PHASE_COLUMNS.items()},
             }
         )
 
@@ -49,20 +59,14 @@ class MQTelemetryListener(StreamingQueryListener):
         self.terminated.append(str(event.id))
 
     def metrics(self, spark: SparkSession) -> DataFrame:
-        schema = (
-            "query_id string, batch_id bigint, num_input_rows bigint, "
-            "input_rows_per_sec double, processed_rows_per_sec double, "
-            "batch_duration_ms bigint"
-        )
-        rows = [
-            (
-                p["query_id"],
-                p["batch_id"],
-                p["num_input_rows"],
-                p["input_rows_per_sec"],
-                p["processed_rows_per_sec"],
-                p["batch_duration_ms"],
-            )
-            for p in self.progress
-        ]
+        columns = [
+            ("query_id", "string"),
+            ("batch_id", "bigint"),
+            ("num_input_rows", "bigint"),
+            ("input_rows_per_sec", "double"),
+            ("processed_rows_per_sec", "double"),
+            ("batch_duration_ms", "bigint"),
+        ] + [(col, "bigint") for col in _PHASE_COLUMNS.values()]
+        schema = ", ".join(f"{name} {kind}" for name, kind in columns)
+        rows = [tuple(p[name] for name, _ in columns) for p in self.progress]
         return spark.createDataFrame(rows, schema)

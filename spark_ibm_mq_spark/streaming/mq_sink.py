@@ -22,10 +22,20 @@ Delivery contract (the PUT-side mirror of the reference's
 
 Scale shape: an MQ queue is a serial ordered stream — one putter per
 queue, exactly like the reference's one-receiver-per-queue GET side — so
-rows funnel through the driver via ``toLocalIterator`` (never a bulk
-``collect``). Parallelism at 100 TB is per-queue, not per-row: partition
-the result by target queue and attach one sink per queue (the same story
-as the source's multi-queue union).
+each micro-batch is taken to the driver once, as one Arrow table, sorted
+there by ``(put_ms, seq_no)`` and put in that order. The sink's memory is
+therefore one whole micro-batch on the driver:
+
+* behind an ``ibmmq`` source that is at most ``maxMessagesPerBatch``
+  messages, the unit the reference buffers before ``store()``
+  (IBMMQReceiver.java:349-393);
+* behind any other source it is whatever batch Spark hands to
+  ``foreachBatch`` — ``availableNow`` over files, for example, hands over
+  the whole input in one batch (as ``mq_sink_roundtrip`` does).
+
+Parallelism at 100 TB is per-queue, not per-row: partition the result by
+target queue and attach one sink per queue (the same story as the
+source's multi-queue union).
 """
 
 from __future__ import annotations
@@ -33,6 +43,7 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from spark_ibm_mq_spark.sources.fake_mq import FakeMQBroker
@@ -93,12 +104,14 @@ class MQWritebackSink:
         with open(self._pending_path(), "w", encoding="utf-8") as f:
             json.dump({"batch": int(batch_id), "len_before": len_before}, f)
 
-        rows = (
-            df.select(self.put_ms_col, self.seq_no_col, self.body_col)
-            .sort(self.put_ms_col, self.seq_no_col)
-            .toLocalIterator()
+        # One collect and a driver-side sort: a Spark sort would sample the
+        # batch in a job of its own (scanning it twice) and then run one
+        # job per partition to hand over a Row per message.
+        t = df.select(self.put_ms_col, self.seq_no_col, self.body_col).toArrow()
+        t = t.take(
+            pc.sort_indices(t, [(self.put_ms_col, "ascending"), (self.seq_no_col, "ascending")])
         )
-        self.broker.put_all((r[0], r[1], r[2]) for r in rows)
+        self.broker.put_all(zip(*(c.to_pylist() for c in t.columns)))
 
         with open(self._committed_path(), "a", encoding="utf-8") as f:
             f.write(f"{int(batch_id)}\n")

@@ -213,3 +213,7 @@ def test_telemetry_listener_collects_progress(spark):
     row = mdf.agg(F.sum("num_input_rows").alias("total")).collect()[0]
     assert row.total >= 1000  # sf0.001 events
     assert listener.started
+    phases = ["latest_offset_ms", "wal_commit_ms", "add_batch_ms", "commit_offsets_ms"]
+    assert set(phases) <= set(mdf.columns)
+    # addBatch is one phase of triggerExecution, never longer than it
+    assert all(r.add_batch_ms <= r.batch_duration_ms for r in mdf.collect())
