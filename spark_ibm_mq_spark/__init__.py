@@ -16,8 +16,11 @@ Re-expresses the capabilities of the reference connector
 - ``plans``         — plan-inspection helpers used by tests/bench.
 """
 
+from spark_ibm_mq_spark import zipimport_gate
 from spark_ibm_mq_spark.session import get_spark, tune_for_oracle
 from spark_ibm_mq_spark.tables import TABLES, load_table, load_all
+
+zipimport_gate.install_in_worker()
 
 __all__ = ["get_spark", "tune_for_oracle", "TABLES", "load_table", "load_all"]
 

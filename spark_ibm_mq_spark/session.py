@@ -9,6 +9,7 @@ comfortably in memory and would be raised (or left to AQE) at 100 TB.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -64,3 +65,38 @@ def get_spark(app_name: str = "spark-ibm-mq-spark", shuffle_partitions: int | No
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     return tune_for_oracle(builder.getOrCreate())
+
+
+def scratch_base() -> str:
+    """Base dir for per-call EPHEMERAL scratch (stream checkpoints, replay
+    sources, sink outputs that live only for one query invocation).
+
+    Prefers tmpfs (/dev/shm) when present: these dirs are created and
+    discarded within a single call, so durability buys nothing, and the
+    checkpoint/commit-log fsync traffic of availableNow micro-batch loops is
+    otherwise pure disk latency (the r9→r10 streaming-family adjudication
+    traced the family's drift to exactly this I/O). On a real cluster the
+    equivalent tier is local NVMe scratch/spill — while anything that must
+    survive a restart (production streaming checkpoints, sink tables) goes
+    to durable shared storage (HDFS/S3), NOT here. Override with
+    SPARK_GRAFT_SCRATCH; falls back to the system tempdir.
+
+    tmpfs is typically capped at RAM/2 (ADVICE r10): at larger scale
+    factors the memoized replay exports plus per-call checkpoints could
+    exhaust it mid-bench with a confusing ENOSPC deep inside Spark, so
+    /dev/shm is only chosen while it still has a conservative free floor
+    (2 GiB — an order of magnitude above the sf0.1 scratch footprint);
+    below that every new scratch dir lands on disk instead."""
+    env = os.environ.get("SPARK_GRAFT_SCRATCH")
+    if env:
+        os.makedirs(env, exist_ok=True)
+        return env
+    shm = "/dev/shm"
+    if os.path.isdir(shm) and os.access(shm, os.W_OK):
+        try:
+            st = os.statvfs(shm)
+            if st.f_bavail * st.f_frsize >= 2 << 30:
+                return shm
+        except OSError:
+            pass
+    return tempfile.gettempdir()

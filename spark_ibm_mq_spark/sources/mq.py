@@ -45,8 +45,12 @@ implement.
 
 from __future__ import annotations
 
+import atexit
 import itertools
 import os
+import shutil
+import tempfile
+import threading
 import time
 
 from pyspark.sql.datasource import (
@@ -56,6 +60,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from spark_ibm_mq_spark.session import scratch_base
 from spark_ibm_mq_spark.sources.fake_mq import FakeMQBroker
 
 SCHEMA = "key string, value string, put_ts timestamp_ntz, seq_no bigint, queue string"
@@ -442,6 +447,27 @@ class IBMMQDataSource(DataSource):
 
 
 _REGISTERED_SESSIONS: set[int] = set()
+# applicationIds whose SparkContext has the package zip
+_PACKAGED_APPS: set[str] = set()
+_REGISTER_LOCK = threading.Lock()
+
+
+def _package_zip(app_id: str) -> str:
+    """Zip the package's sources into a directory of this application's own
+    under ``scratch_base()``, removed at interpreter exit."""
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    d = tempfile.mkdtemp(prefix=f"ibmmq_pkg_{app_id}_", dir=scratch_base())
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    zip_path = os.path.join(d, "spark_ibm_mq_spark_pkg.zip")
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    zf.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+    return zip_path
 
 
 def register_ibmmq(spark) -> None:
@@ -451,23 +477,15 @@ def register_ibmmq(spark) -> None:
     (driver-side planner for the stream reader, executors for the batch
     reader) must be able to import spark_ibm_mq_spark — addPyFile'ing a
     package zip is the standard way to guarantee that for an externally
-    created session (e.g. the correctness driver's)."""
-    key = id(spark)
-    if key in _REGISTERED_SESSIONS:
-        return
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zip_path = os.path.join("/tmp", "spark_ibm_mq_spark_pkg.zip")
-    tmp = zip_path + ".tmp"
-    with zipfile.ZipFile(tmp, "w") as zf:  # rebuilt each time: must track code
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
-    os.replace(tmp, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
-    spark.dataSource.register(IBMMQDataSource)
-    _REGISTERED_SESSIONS.add(key)
+    created session (e.g. the correctness driver's). The zip is built and
+    added once per SparkContext: the sessions of one context share its
+    files, and a second path with the same file name would be refused."""
+    with _REGISTER_LOCK:
+        if id(spark) in _REGISTERED_SESSIONS:
+            return
+        sc = spark.sparkContext
+        if sc.applicationId not in _PACKAGED_APPS:
+            sc.addPyFile(_package_zip(sc.applicationId))
+            _PACKAGED_APPS.add(sc.applicationId)
+        spark.dataSource.register(IBMMQDataSource)
+        _REGISTERED_SESSIONS.add(id(spark))

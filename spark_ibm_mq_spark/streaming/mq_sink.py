@@ -87,8 +87,11 @@ class MQWritebackSink:
             return
         with open(p, encoding="utf-8") as f:
             pend = json.load(f)
+        # A marker of a committed batch is left by a crash after the commit
+        # but before the marker's removal: that batch is whole, keep it.
+        torn = pend["batch"] not in self._committed_ids()
         qfile = self.broker._f("jsonl")
-        if os.path.exists(qfile) and os.path.getsize(qfile) > pend["len_before"]:
+        if torn and os.path.exists(qfile) and os.path.getsize(qfile) > pend["len_before"]:
             with open(qfile, "r+", encoding="utf-8") as f:
                 f.truncate(pend["len_before"])
         os.remove(p)

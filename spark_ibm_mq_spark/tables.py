@@ -12,6 +12,7 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -29,10 +30,38 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# Confs that change the schema Spark infers from a parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# path -> (size, mtime_ns, inference confs), StructType
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without a schema-inference job per call.
+
+    Inference is a Spark job; its result depends only on the file and on
+    the inference confs, so it is memoized on those (SCALE.md §9: fixture
+    caches are fingerprinted by size+mtime, never by path alone)."""
+    st = os.stat(path)
+    fp = (st.st_size, st.st_mtime_ns, *(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (fp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.abspath(os.path.join(sf_dir, f"{name}.parquet")))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) read as long (nanosAsLong). Convert ns → µs with
         # integer DIV (a double division would lose precision above 2^53 ns)
@@ -139,9 +168,12 @@ def durable_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     call here silently upgrades to the durable path; the local[...] test
     session has no dir and keeps the zero-copy local variant.
 
-    ``eager=False`` defers materialization to the FIRST action on the
-    returned frame — callers that immediately ``count()`` the checkpointed
-    frame fold materialization + count into ONE job instead of two."""
+    ``eager=False`` defers writing the checkpoint blocks to the first
+    action on the returned frame, so a caller that ``count()``s it at once
+    folds materialization and count into one job instead of two. It does
+    not make the call free: under AQE (on in every session here)
+    ``Dataset.checkpoint`` still executes every shuffle stage of ``df``
+    when it is called, to plan the frame it wraps — one job per stage."""
     sc = df.sparkSession.sparkContext
     try:
         has_dir = sc.getCheckpointDir() is not None

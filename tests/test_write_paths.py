@@ -107,6 +107,28 @@ def test_mq_sink_rolls_back_torn_batch(spark, tmp_path):
     assert all(m["body"] != "torn" for m in msgs)
 
 
+def test_mq_sink_keeps_committed_batch_behind_stale_pending_marker(spark, tmp_path):
+    """A crash after batch 0 is committed but before its pending marker is
+    removed leaves that marker behind; the next batch must drop it without
+    backing batch 0 out."""
+    import json
+    import os
+
+    from spark_ibm_mq_spark.sources.fake_mq import FakeMQBroker
+    from spark_ibm_mq_spark.streaming.mq_sink import MQWritebackSink
+
+    sink = MQWritebackSink(str(tmp_path), "OUT.Q")
+    sink(_mk_df(spark, 0, 10), 0)
+    pending = os.path.join(str(tmp_path), "OUT.Q.sink_pending")
+    with open(pending, "w") as f:  # the marker batch 0 wrote before its append
+        json.dump({"batch": 0, "len_before": 0}, f)
+    sink(_mk_df(spark, 0, 10), 0)  # replay after the restart
+    sink(_mk_df(spark, 10, 20), 1)
+    broker = FakeMQBroker(str(tmp_path), "OUT.Q")
+    assert [m["seq_no"] for m in broker.messages(0)] == list(range(20))
+    assert not os.path.exists(pending)
+
+
 def test_mq_sink_orders_partitioned_batch_and_keeps_binary_bodies(spark, tmp_path):
     """The sink orders a batch by (put_ms, seq_no) whatever its partitioning
     (ties on put_ms, seq_no descending in input order, three partitions), a
