@@ -29,6 +29,18 @@ _RUNTIME_CONFS = {
     # fixtures are small; broadcast threshold default (10MB) already catches
     # region/nation/supplier/part — keep explicit for clarity at scale.
     "spark.sql.autoBroadcastJoinThreshold": str(10 * 1024 * 1024),
+    # Streaming checkpoints (offset log, commit log, state and sink
+    # metadata) through the FileSystem API instead of the default
+    # FileContext manager. Without the libhadoop native library, Hadoop's
+    # local FileContext starts a `chmod` or `stat` child process about ten
+    # times per log file (~45 ms for each of the two files a micro-batch
+    # writes); the FileSystem API starts 2 `chmod` children (~15 ms). On
+    # `file:` paths it still writes through a temp file renamed into place
+    # (an atomic POSIX rename) and still writes `.crc` checksum files.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 
@@ -72,21 +84,23 @@ def scratch_base() -> str:
     sources, sink outputs that live only for one query invocation).
 
     Prefers tmpfs (/dev/shm) when present: these dirs are created and
-    discarded within a single call, so durability buys nothing, and the
-    checkpoint/commit-log fsync traffic of availableNow micro-batch loops is
-    otherwise pure disk latency (the r9→r10 streaming-family adjudication
-    traced the family's drift to exactly this I/O). On a real cluster the
-    equivalent tier is local NVMe scratch/spill — while anything that must
+    discarded within a single call, so durability buys nothing and they
+    need not touch a disk. It is not a speed-up for the checkpoint logs of
+    micro-batch loops: a probe that wrote the commit log 60 times timed
+    ext4 and tmpfs within 10% of each other, and the per-batch cost was
+    the child processes Hadoop's local file API starts (see the checkpoint
+    manager in `_RUNTIME_CONFS`), not disk latency. On a real cluster the
+    equivalent tier is local NVMe scratch/spill, while anything that must
     survive a restart (production streaming checkpoints, sink tables) goes
     to durable shared storage (HDFS/S3), NOT here. Override with
     SPARK_GRAFT_SCRATCH; falls back to the system tempdir.
 
-    tmpfs is typically capped at RAM/2 (ADVICE r10): at larger scale
-    factors the memoized replay exports plus per-call checkpoints could
-    exhaust it mid-bench with a confusing ENOSPC deep inside Spark, so
-    /dev/shm is only chosen while it still has a conservative free floor
-    (2 GiB — an order of magnitude above the sf0.1 scratch footprint);
-    below that every new scratch dir lands on disk instead."""
+    tmpfs is typically capped at RAM/2: at larger scale factors the
+    memoized replay exports plus per-call checkpoints could exhaust it
+    mid-bench with a confusing ENOSPC deep inside Spark, so /dev/shm is
+    only chosen while it still has a conservative free floor (2 GiB, an
+    order of magnitude above the sf0.1 scratch footprint); below that
+    every new scratch dir lands on disk instead."""
     env = os.environ.get("SPARK_GRAFT_SCRATCH")
     if env:
         os.makedirs(env, exist_ok=True)

@@ -21,6 +21,8 @@ Layout under a broker directory (one broker == one queue manager):
     <dir>/<queue>.fail     exists → simulate a broken connection: reads
                            raise until the file is removed
                            (reconnect path, IBMMQReceiver.java:154-198)
+    <dir>/<queue>.ackfail  exists → the next ack fails once and removes it
+                           (a crash between the offset log and the commit)
 
 Semantics:
 - *browse* (keepMessages=true) reads never move `.ack`; a browse cursor is
@@ -43,9 +45,10 @@ from collections.abc import Iterable
 class FakeMQBroker:
     """A file-backed queue manager exposing the calls the `ibmmq` source and
     `MQWritebackSink` make: ``message_block(from_pos, limit, byte_off)``,
-    ``put_ms_index_with_offsets(from_pos)``, ``ack(upto_pos)``,
-    ``acked()``, ``depth()``, ``get_inhibited()`` and ``put_all(messages)``.
-    A client for a live queue manager would implement the same calls:
+    ``byte_offset(pos)``, ``put_ms_index_with_offsets(from_pos)``,
+    ``ack(upto_pos)``, ``acked()``, ``depth()``, ``get_inhibited()`` and
+    ``put_all(messages)``. A client for a live queue manager would
+    implement the same calls:
 
     - connect with MQCSP auth              ↔ IBMMQReceiver.java:403-415
     - browse cursor (MQOO_BROWSE, BROWSE_FIRST/NEXT) == ``from_pos``;
@@ -107,23 +110,34 @@ class FakeMQBroker:
         """Up to ``limit`` messages from queue position ``from_pos`` (a line
         number; destructive consumers pass ``from_pos >= acked()``) as raw
         newline-delimited JSON, which the source parses in one columnar
-        pass. When the planner supplies ``byte_off`` (from
-        `put_ms_index_with_offsets`), the read seeks there instead of
-        skipping ``from_pos`` lines, so each batch split costs O(its slice)
-        rather than O(queue prefix)."""
+        pass. ``byte_off``, when the caller has it, is the byte offset of
+        ``from_pos``: the read seeks there instead of skipping ``from_pos``
+        lines, so it costs O(block) rather than O(queue prefix). The batch
+        planner takes it from `put_ms_index_with_offsets`; the stream reader
+        carries it in its offset, where each block's end (always a ``\n``)
+        is the next block's start."""
+        if byte_off is None:
+            byte_off = self.byte_offset(from_pos)
         self._check_connection()
         try:
             f = open(self._f("jsonl"), "rb")
         except FileNotFoundError:
             return b""
         with f:
-            if byte_off is None:
-                stop = None if limit is None else from_pos + limit
-                block = b"".join(itertools.islice(f, from_pos, stop))
-            else:
-                f.seek(byte_off)
-                block = b"".join(itertools.islice(f, limit))
+            f.seek(byte_off)
+            block = b"".join(itertools.islice(f, limit))
         return block[: block.rfind(b"\n") + 1]
+
+    def byte_offset(self, pos: int) -> int:
+        """The byte offset of queue position ``pos``, by skipping ``pos``
+        lines: how a reader without a byte cursor finds where to seek."""
+        self._check_connection()
+        try:
+            f = open(self._f("jsonl"), "rb")
+        except FileNotFoundError:
+            return 0
+        with f:
+            return sum(map(len, itertools.islice(f, pos)))
 
     def put_ms_index_with_offsets(
         self, from_pos: int
@@ -186,7 +200,15 @@ class FakeMQBroker:
         return rec["body"]
 
     def ack(self, upto_pos: int) -> None:
-        """Destructively consume messages below upto_pos (monotone)."""
+        """Destructively consume messages below upto_pos (monotone). With
+        the ``ackfail`` flag set, the call fails once instead and clears
+        the flag: the commit that fails after Spark has logged the offset."""
+        try:
+            os.remove(self._f("ackfail"))
+        except FileNotFoundError:
+            pass
+        else:
+            raise OSError(f"fake MQ: commit on {self.queue} failed")
         cur = self.acked()
         if upto_pos > cur:
             tmp = self._f("ack.tmp")
@@ -214,6 +236,9 @@ class FakeMQBroker:
             open(self._f("inhibit"), "w").close()
         elif os.path.exists(self._f("inhibit")):
             os.remove(self._f("inhibit"))
+
+    def fail_next_ack(self) -> None:
+        open(self._f("ackfail"), "w").close()
 
     def connection_broken(self) -> bool:
         return os.path.exists(self._f("fail"))

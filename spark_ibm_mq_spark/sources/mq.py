@@ -32,9 +32,15 @@ BATCH path reads a bounded snapshot and does fan out: the seq-repair chain
 resets at put_ms boundaries, so MQBatchReader splits the snapshot at
 timestamp changes into independent executor-side slices (plan_splits).
 
-Deterministic replay: the synthesized-seq state (last_ms, last_seq) is part
-of the offset JSON, so a replayed batch mints identical keys (SURVEY.md §7
-"hard parts" — this is what keeps exactly-once dedup sound across restarts).
+Deterministic replay: the stream offset is ``{pos, byte, last_ms,
+last_seq}``. ``pos`` is the queue position and ``byte`` its byte offset in
+the queue file, so each read seeks instead of re-scanning the consumed
+prefix; the synthesized-seq state (last_ms, last_seq) rides along, so a
+replayed batch mints identical keys (SURVEY.md §7 "hard parts" — this is
+what keeps exactly-once dedup sound across restarts). An offset without
+``byte`` (a checkpoint written before it existed, or the initial offset)
+costs one line skip to resolve, and the end offset of the batch read from
+it carries ``byte`` again.
 
 Every read (stream `read`, replay `readBetweenOffsets`, batch `read`) goes
 through `read_block`: one broker fetch under the one reconnect policy
@@ -53,6 +59,7 @@ import tempfile
 import threading
 import time
 
+from pyspark.sql import SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -272,13 +279,24 @@ def read_block(
     byte_off: int | None = None,
 ):
     """The one broker read path: up to ``limit`` messages from queue
-    position ``pos`` (or byte offset ``byte_off``), parsed with the repair
-    chain seeded from (last_ms, last_seq). Live reads and replays share it,
-    so a replayed range mints byte-identical keys. Returns what
-    `arrow_batch_from_block` returns."""
+    position ``pos``, parsed with the repair chain seeded from
+    (last_ms, last_seq). ``byte_off`` is the byte offset of ``pos``, which
+    the read seeks to; without it the broker finds it by skipping ``pos``
+    lines. Live reads and replays share this path, so a replayed range
+    mints byte-identical keys. Returns `arrow_batch_from_block`'s
+    (batch, last_ms, last_seq) and the byte offset just past the block,
+    where the next read starts."""
     broker = opts.broker()
-    block = _with_reconnect(opts, lambda: broker.message_block(pos, limit, byte_off))
-    return arrow_batch_from_block(block, opts.queue, opts.encoding, last_ms, last_seq)
+
+    def fetch():
+        off = broker.byte_offset(pos) if byte_off is None else byte_off
+        return off, broker.message_block(pos, limit, off)
+
+    off, block = _with_reconnect(opts, fetch)
+    return (
+        *arrow_batch_from_block(block, opts.queue, opts.encoding, last_ms, last_seq),
+        off + len(block),
+    )
 
 
 class MQSplit(InputPartition):
@@ -361,7 +379,7 @@ class MQBatchReader(DataSourceReader):
         has no carry-over by construction."""
         if partition.count <= 0:
             return
-        batch, _, _ = read_block(
+        batch, *_ = read_block(
             self.opts, partition.from_pos, partition.count, 0, 0, partition.byte_off
         )
         if batch is not None:
@@ -369,9 +387,15 @@ class MQBatchReader(DataSourceReader):
 
 
 class MQSimpleStreamReader(SimpleDataSourceStreamReader):
-    """Streaming path. Offset JSON carries (pos, last_ms, last_seq): queue
-    position plus the collision-repair state, so read/replay are bit-identical
-    (deterministic keys across restarts)."""
+    """Streaming path. Offset JSON carries {pos, byte, last_ms, last_seq}:
+    the queue position, its byte offset (each read seeks there, so a batch
+    costs O(batch), not O(queue position)) and the collision-repair state,
+    so read and replay are bit-identical (deterministic keys across
+    restarts). ``byte`` is exact across a torn tail: a block always ends at
+    a newline, so start byte + block length is the next message's start.
+    The initial offset, and an offset from a checkpoint written before
+    ``byte`` existed, have none; the read from such an offset finds it by
+    skipping ``pos`` lines once."""
 
     def __init__(self, options: dict) -> None:
         self.opts = _Options(options)
@@ -394,14 +418,15 @@ class MQSimpleStreamReader(SimpleDataSourceStreamReader):
         repair state out."""
         if self._paused():
             return iter([]), dict(start)
-        batch, last_ms, last_seq = read_block(
+        batch, last_ms, last_seq, end_byte = read_block(
             self.opts, start["pos"], self.opts.max_per_batch,
-            start["last_ms"], start["last_seq"],
+            start["last_ms"], start["last_seq"], start.get("byte"),
         )
         if batch is None:
             return iter([]), dict(start)
         end = {
             "pos": start["pos"] + batch.num_rows,
+            "byte": end_byte,
             "last_ms": last_ms,
             "last_seq": last_seq,
         }
@@ -415,8 +440,9 @@ class MQSimpleStreamReader(SimpleDataSourceStreamReader):
         n = end["pos"] - start["pos"]
         if n <= 0:
             return iter([])
-        batch, _, _ = read_block(
-            self.opts, start["pos"], n, start["last_ms"], start["last_seq"]
+        batch, *_ = read_block(
+            self.opts, start["pos"], n, start["last_ms"], start["last_seq"],
+            start.get("byte"),
         )
         return iter([] if batch is None else [batch])
 
@@ -471,7 +497,8 @@ def _package_zip(app_id: str) -> str:
 
 
 def register_ibmmq(spark) -> None:
-    """Register the source and ship the package to worker Python processes.
+    """Register the source in ``spark`` and ship the package to worker
+    Python processes. Idempotent for every session of a SparkContext.
 
     The DataSource class is pickled by reference, so the Python workers
     (driver-side planner for the stream reader, executors for the batch
@@ -479,7 +506,14 @@ def register_ibmmq(spark) -> None:
     package zip is the standard way to guarantee that for an externally
     created session (e.g. the correctness driver's). The zip is built and
     added once per SparkContext: the sessions of one context share its
-    files, and a second path with the same file name would be refused."""
+    files, and a second path with the same file name would be refused.
+
+    Registrations are per session, but Spark's duplicate-name check looks
+    the name up through the *active* session: a second session of the
+    context (``spark.newSession()``) is refused with
+    DATA_SOURCE_ALREADY_EXISTS unless it is the active one while it
+    registers. A session counted in ``_REGISTERED_SESSIONS`` is left as it
+    is, whatever it has registered under the name."""
     with _REGISTER_LOCK:
         if id(spark) in _REGISTERED_SESSIONS:
             return
@@ -487,5 +521,16 @@ def register_ibmmq(spark) -> None:
         if sc.applicationId not in _PACKAGED_APPS:
             sc.addPyFile(_package_zip(sc.applicationId))
             _PACKAGED_APPS.add(sc.applicationId)
-        spark.dataSource.register(IBMMQDataSource)
+        jss = spark._jsparkSession
+        if not jss.sessionState().dataSourceManager().dataSourceExists(IBMMQDataSource.name()):
+            jcls = SparkSession._get_j_spark_session_class(spark._jvm)
+            active = jcls.getActiveSession()
+            jcls.setActiveSession(jss)
+            try:
+                spark.dataSource.register(IBMMQDataSource)
+            finally:
+                if active.isDefined():
+                    jcls.setActiveSession(active.get())
+                else:
+                    jcls.clearActiveSession()
         _REGISTERED_SESSIONS.add(id(spark))

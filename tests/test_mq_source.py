@@ -5,7 +5,9 @@ encoding, reconnect backoff, and deterministic replay."""
 
 from __future__ import annotations
 
+import json
 import os
+import tempfile
 import threading
 import time
 
@@ -364,7 +366,21 @@ def test_read_between_offsets_deterministic(broker):
     rows2 = _flatten_stream(r.readBetweenOffsets(start, end))
     assert rows1 == rows2
     assert [x[0] for x in rows1] == ["1000_1", "1000_2", "1000_3", "2000_1"]
-    assert end == {"pos": 4, "last_ms": 2000, "last_seq": 1}
+    size = os.path.getsize(broker._f("jsonl"))
+    assert end == {"pos": 4, "byte": size, "last_ms": 2000, "last_seq": 1}
+    # an offset without the byte cursor (an older checkpoint) reads and
+    # replays the same rows, and the end offset carries the cursor again
+    r2 = MQSimpleStreamReader(
+        {"path": broker.path, "queue": broker.queue, "maxmessagesperbatch": "2"}
+    )
+    _, mid = r2.read(r2.initialOffset())
+    it_new, end2 = r2.read(mid)
+    legacy = {k: v for k, v in mid.items() if k != "byte"}
+    it_old, end2_old = r2.read(legacy)
+    assert end2_old == end2 == end
+    rows_new = _flatten_stream(it_new)
+    assert _flatten_stream(it_old) == rows_new == rows1[2:]
+    assert _flatten_stream(r2.readBetweenOffsets(legacy, end2)) == rows_new
     # a block with no messages leaves the carry state as it was
     for block in (b"", b"\n"):
         assert arrow_batch_from_block(block, "Q", "utf-8", 2000, 1) == (None, 2000, 1)
@@ -383,7 +399,7 @@ def test_torn_tail_is_read_once_complete(broker):
     stream = MQSimpleStreamReader(opts)
     it, end = stream.read(stream.initialOffset())
     assert [x[0] for x in _flatten_stream(it)] == ["1000_1", "1000_2"]
-    assert end == {"pos": 2, "last_ms": 1000, "last_seq": 2}
+    assert end == {"pos": 2, "byte": 2 * len(tail), "last_ms": 1000, "last_seq": 2}
     batch = MQBatchReader(opts)
     parts = batch.partitions()
     assert sum(p.count for p in parts) == 2
@@ -394,7 +410,53 @@ def test_torn_tail_is_read_once_complete(broker):
         f.write(tail[20:])
     it, end = stream.read(end)
     assert [x[0] for x in _flatten_stream(it)] == ["1000_3"]
-    assert end == {"pos": 3, "last_ms": 1000, "last_seq": 3}
+    assert end == {"pos": 3, "byte": 3 * len(tail), "last_ms": 1000, "last_seq": 3}
+
+
+@given(
+    bodies=st.lists(
+        st.one_of(st.text(max_size=12), st.binary(max_size=12)), min_size=0, max_size=30
+    ),
+    limit=st.integers(1, 7),
+    torn=st.integers(0, 40),
+)
+@example(bodies=[], limit=1, torn=0)
+@example(bodies=["a", "é\n", b"\n\xff"], limit=2, torn=17)
+@settings(max_examples=150, deadline=None)
+def test_message_block_seek_matches_skip(bodies, limit, torn):
+    """Reading by byte cursor returns the same bytes as skipping lines, at
+    every queue position and with a half-appended last line: the cursor is
+    chained as the stream reader chains it (next start = start + block
+    length), and it agrees with the planner's offsets and with
+    `byte_offset`. The reference slices the file's complete lines."""
+    with tempfile.TemporaryDirectory() as d:
+        b = FakeMQBroker(d, "Q.SEEK")
+        b.put_all((1000 + i // 3, 1, body) for i, body in enumerate(bodies))
+        tail = b'{"put_ms": 9000, "seq_no": 1, "body": "torn tail"}\n'
+        with open(b._f("jsonl"), "ab") as f:
+            f.write(tail[: min(torn, len(tail) - 1)])
+        with open(b._f("jsonl"), "rb") as f:
+            lines = [line for line in f if line.endswith(b"\n")]
+        assert len(lines) == len(bodies)
+
+        def skipped(pos):
+            return b"".join(lines[pos : pos + limit])
+
+        _, offsets = b.put_ms_index_with_offsets(0)
+        for pos in range(len(bodies) + 2):
+            byte = b.byte_offset(pos)
+            if pos < len(bodies):
+                assert byte == offsets[pos]
+            assert b.message_block(pos, limit, byte) == skipped(pos)
+            assert b.message_block(pos, limit) == skipped(pos)
+        pos = byte = 0
+        while True:
+            block = b.message_block(pos, limit, byte)
+            assert block == skipped(pos)
+            if not block:
+                break
+            pos, byte = pos + block.count(b"\n"), byte + len(block)
+        assert pos == len(bodies)
 
 
 @given(
@@ -431,6 +493,180 @@ def test_seeded_repair_matches_serial_chain(stream, seed_ms, seed_seq):
         seed_seq,
     )
     assert list(vec) == serial
+
+
+# ------------------------------------------------- injected failures and resume
+
+
+def _dedup_drain(spark, broker, work, max_per_batch):
+    """A destructive stream through `dropDuplicatesWithinWatermark(["key"])`
+    into a parquet sink, restarted with the same checkpoint (availableNow)
+    until the sink holds every message put so far. Returns the sink's
+    (key, value) rows in key order and the number of runs that failed.
+    One state partition and no watermark-only batches keep each run short."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
+    total = broker.depth() + broker.acked()
+    failed = 0
+    confs = {
+        "spark.sql.shuffle.partitions": "1",
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        for _ in range(12):
+            q = (
+                _reader(spark, broker, keepMessages="false",
+                        maxMessagesPerBatch=str(max_per_batch))
+                .load()
+                .withColumn("put_ts", F.col("put_ts").cast("timestamp"))
+                .withWatermark("put_ts", "1 hour")
+                .dropDuplicatesWithinWatermark(["key"])
+                .writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                q.awaitTermination()
+            except StreamingQueryException:  # the injected failure; restart
+                failed += 1
+                continue
+            if os.path.isdir(out) and spark.read.parquet(out).count() >= total:
+                break
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    rows = spark.read.parquet(out).select("key", "value").collect()
+    return sorted((r.key, r.value) for r in rows), failed
+
+
+def _collision_batch(n, start=0):
+    """``n`` messages in put_ms runs of 3 with raw seq 1, so keys come from
+    the repair chain carried in the offset."""
+    return [(1000 + (start + i) // 3, 1, f"m{start + i}") for i in range(n)]
+
+
+_N = 30  # messages a resume test delivers: three batches of 10
+
+
+@pytest.fixture(scope="module")
+def clean_rows(spark, tmp_path_factory):
+    """The (key, value) rows of a clean destructive drain of the resume
+    tests' queue: no failure, no restart mid-batch."""
+    register_ibmmq(spark)
+    tmp = tmp_path_factory.mktemp("clean")
+    clean = FakeMQBroker(str(tmp / "broker"), "Q.TEST")
+    clean.put_all(_collision_batch(_N))
+    rows, failed = _dedup_drain(spark, clean, str(tmp / "work"), 10)
+    assert failed == 0
+    return rows
+
+
+def _assert_same_delivery(rows, clean_rows):
+    keys = [k for k, _ in rows]
+    assert len(rows) == _N, "lost or duplicated messages"
+    assert len(set(keys)) == _N
+    assert rows == clean_rows  # byte-identical keys and bodies
+
+
+def test_commit_failure_after_offset_log_then_restart(spark, broker, tmp_path, clean_rows):
+    """Crash between the offset log and the MQ commit: `commit(end)` raises
+    once, after Spark has written the next batch's offset log. The restart
+    resumes from the checkpoint; nothing is lost, the deduplicated output
+    holds each message once, and its keys are those of a clean run."""
+    register_ibmmq(spark)
+    broker.put_all(_collision_batch(_N))
+    broker.fail_next_ack()
+    rows, failed = _dedup_drain(spark, broker, str(tmp_path / "work"), 10)
+    assert failed == 1 and not os.path.exists(broker._f("ackfail"))
+    _assert_same_delivery(rows, clean_rows)
+    assert broker.acked() >= _N - 10  # every batch but the last is acked
+
+
+def _strip_byte_cursor(ckpt):
+    """Rewrite the checkpoint's offset log as a checkpoint from before the
+    byte cursor: source offsets without ``byte``, stale checksums dropped."""
+    offsets = os.path.join(ckpt, "offsets")
+    names = [f for f in os.listdir(offsets) if f.isdigit()]
+    assert names
+    for name in names:
+        path = os.path.join(offsets, name)
+        with open(path, encoding="utf-8") as f:
+            lines = f.read().split("\n")
+        src = json.loads(lines[2])
+        assert "byte" in src
+        del src["byte"]
+        lines[2] = json.dumps(src)
+        with open(path, "w", encoding="utf-8") as f:
+            f.write("\n".join(lines))
+        crc = os.path.join(offsets, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    return sorted(names, key=int)
+
+
+def test_old_checkpoint_without_byte_cursor_resumes(spark, broker, tmp_path, clean_rows):
+    """A checkpoint written the old way (default checkpoint file manager,
+    offsets without ``byte``) resumes under the byte cursor: its last batch
+    is replayed from an offset without ``byte`` and the next batch read
+    from one, each by one line skip. No message is lost or duplicated and
+    the keys match a clean run, including across the repair chain that
+    spans the resume."""
+    from spark_ibm_mq_spark.session import tune_for_oracle
+
+    register_ibmmq(spark)
+    work = str(tmp_path / "work")
+    ckpt = os.path.join(work, "ckpt")
+    broker.put_all(_collision_batch(16))
+    spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+    try:
+        rows, failed = _dedup_drain(spark, broker, work, 10)
+    finally:
+        tune_for_oracle(spark)
+    assert failed == 0 and len(rows) == 16
+    last = _strip_byte_cursor(ckpt)[-1]
+    # drop the last commit so the restart replays that batch as well
+    for f in (last, f".{last}.crc"):
+        path = os.path.join(ckpt, "commits", f)
+        if os.path.exists(path):
+            os.remove(path)
+    broker.put_all(_collision_batch(_N - 16, start=16))
+    rows, failed = _dedup_drain(spark, broker, work, 10)
+    assert failed == 0
+    _assert_same_delivery(rows, clean_rows)
+    # the deduplication above would hide a batch read from the wrong place;
+    # the offsets logged after the resume would not
+    offsets = os.path.join(ckpt, "offsets")
+    logged = [
+        json.loads(open(os.path.join(offsets, f), encoding="utf-8").read().split("\n")[2])
+        for f in sorted((f for f in os.listdir(offsets) if f.isdigit()), key=int)
+    ]
+    resumed = [o for o in logged if "byte" in o]
+    assert resumed and resumed[-1]["pos"] == _N
+    assert all(o["byte"] == broker.byte_offset(o["pos"]) for o in resumed)
+
+
+def test_register_on_a_second_session_of_one_context(spark, broker):
+    """`register_ibmmq` is idempotent for every session of a SparkContext:
+    a session from `newSession()` registers and reads, and the session
+    that was active stays active."""
+    from pyspark.sql import SparkSession
+
+    broker.put_all(_collision_batch(5))
+    register_ibmmq(spark)
+    active = SparkSession.getActiveSession()._jsparkSession
+    other = spark.newSession()
+    register_ibmmq(other)
+    register_ibmmq(other)
+    df = other.read.format("ibmmq").option("path", broker.path).option("queue", broker.queue)
+    assert df.load().count() == 5
+    assert SparkSession.getActiveSession()._jsparkSession.equals(active)
 
 
 # ---------------------------------------------------------------- DLQ routing

@@ -217,3 +217,33 @@ def test_telemetry_listener_collects_progress(spark):
     assert set(phases) <= set(mdf.columns)
     # addBatch is one phase of triggerExecution, never longer than it
     assert all(r.add_batch_ms <= r.batch_duration_ms for r in mdf.collect())
+
+
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _checkpoint_manager_class(session, path) -> str:
+    jvm = session._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    return manager.create(
+        jvm.org.apache.hadoop.fs.Path(str(path)),
+        session._jsparkSession.sessionState().newHadoopConf(),
+    ).getClass().getName()
+
+
+def test_sessions_write_checkpoints_through_the_filesystem_api(spark, tmp_path):
+    """Streaming checkpoints go through the FileSystem-based manager, both
+    in a `get_spark()` session and in a plain session passed through
+    `tune_for_oracle`: Spark's default FileContext manager starts several
+    child processes per checkpoint log file on a host without libhadoop."""
+    from spark_ibm_mq_spark.session import tune_for_oracle
+
+    assert _checkpoint_manager_class(spark, tmp_path) == _FS_CHECKPOINT_MANAGER
+    plain = spark.newSession()
+    plain.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+    assert _checkpoint_manager_class(plain, tmp_path) != _FS_CHECKPOINT_MANAGER
+    tune_for_oracle(plain)
+    assert _checkpoint_manager_class(plain, tmp_path) == _FS_CHECKPOINT_MANAGER
