@@ -116,7 +116,10 @@ _CHECK_FIRST = [
 
 
 def _ordered(mapping: dict) -> dict:
-    head = {k: mapping[k] for k in _CHECK_FIRST if k in mapping}
+    missing = set(_CHECK_FIRST) - mapping.keys()
+    if missing:
+        raise ValueError(f"_CHECK_FIRST names unknown queries: {sorted(missing)}")
+    head = {k: mapping[k] for k in _CHECK_FIRST}
     head.update({k: v for k, v in mapping.items() if k not in head})
     return head
 

@@ -14,8 +14,12 @@ the queries.
 
 Usage::
 
-    python scripts/code_ab_panel.py --other /tmp/r12best \
-        [--pairs 5] [--sf-dir /root/testdata/sf0.1] [--out scripts/ab_code_r14.json]
+    python scripts/code_ab_panel.py --other <checkout of the old commit> \
+        --out <record.json> [--pairs 5] [--sf-dir <tables dir>]
+
+``--out`` is required: the committed ``scripts/ab_*.json`` records are
+evidence for past claims, and a default pointing at one of them would
+overwrite it on every run.
 
 The panel spans the families the r13 record inflated most (pipeline_*,
 stream_sliding_*, retrieval/text scoring, sim_tf blocked cosine) plus
@@ -90,7 +94,7 @@ def main() -> None:
     ap.add_argument("--other", required=True, help="worktree of the old commit")
     ap.add_argument("--pairs", type=int, default=5)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default=os.path.join(REPO, "scripts", "ab_code_r14.json"))
+    ap.add_argument("--out", required=True, help="path of the JSON record to write")
     ap.add_argument("--panel", default=None, help="comma-separated override")
     args = ap.parse_args()
 

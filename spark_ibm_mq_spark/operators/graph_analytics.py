@@ -9,19 +9,23 @@ edge list comes from the same self-equi-join-on-container shape as
 `affinity_copurchase_pmi` — parts co-occurring in an order — so the graph
 is symmetric and every vertex has out-degree ≥ 1 (no dangling-mass term).
 
-Scale notes: each round is one join (edges ⋈ ranks on src) + one
-map-side-combinable groupBy(dst) + one left join back to the vertex set —
-all keyed on the part key. The PER-ROUND input (edges ⋈ out-degree) is
-checkpointed once before the loop (`durable_checkpoint`: reliable
-`checkpoint` when the session has a checkpoint dir, executor-local
-otherwise), so the order-pair self-join and degree aggregate run exactly
-once and every round starts from materialized, src-partitioned blocks.
-The rank side of the per-round join goes through `size_gated_broadcast`:
-a vertex frame that fits the broadcast threshold skips the edge-side
-shuffle entirely; a 100 TB-scale vertex set degrades safely to the
-shuffle join on src. At 100 TB, raise the round count and checkpoint the
-rank frame every ~5 rounds — the same lineage discipline as the
-connected-components loop.
+Scale notes: the memoized, checkpointed edge list (`_full_edges`) is the
+only materialized frame. Out-degree and the vertex count N ride on every
+edge from before the first round, so a round is one map-side-combinable
+groupBy(dst) over the edges carrying their source's rank share, preceded
+from round 2 on by one join of the edges with the previous round's ranks
+on src — all keyed on the part key. The graph is symmetric, so every
+vertex is some edge's dst and the groupBy's output is the whole vertex
+set: there is no vertex frame to join back to. The rounds stay lazy:
+building the query runs no Spark job, and its action executes all rounds
+as one linear AQE plan. The rank side of the per-round join goes through
+`size_gated_broadcast`: a vertex frame that fits the broadcast threshold
+skips the edge-side shuffle entirely; a 100 TB-scale vertex set degrades
+safely to the shuffle join on src. At 100 TB, raise the round count and
+checkpoint the rank frame every ~5 rounds, which bounds plan size and
+lineage — the same discipline as the connected-components loop; at three
+rounds a checkpoint costs more than it saves, because under AQE it runs
+every shuffle stage of its input when it is called.
 """
 
 from __future__ import annotations
@@ -94,67 +98,43 @@ def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     The edge build is the `affinity_copurchase_pmi` candidate shape:
     distinct (order, part) self-equi-joined on the order key, so edge
     volume is Σ width(order)², bounded by basket width. Each round is
-    join-on-src → groupBy(dst) partial-agg → left join to the vertex set;
-    the vertex count rides as a 1-row broadcast. Rank mass: symmetric
+    join-on-src → groupBy(dst) partial-agg; round 1 needs no join, as every
+    vertex starts at 1/N. The vertex count rides as a 1-row broadcast
+    attached to every edge. Rank mass: symmetric
     edges mean no dangling vertices, so the 0.15/N teleport plus 0.85×
     the in-flow is the complete update — no dangling-redistribution term
     to shuffle."""
     edges = _full_edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # checkpoint the PER-ROUND input (edges ⋈ out-degree) on top of the
-    # session-memoized edge list: every round and the vertex/degree
-    # frames all start from this one materialization, so the degree
-    # aggregate and join run exactly once instead of once per consumer
-    contrib_src = durable_checkpoint(edges.join(deg, "src"), eager=False)
-    # r17 opt (guide §3.3/§5, the sim_mmr_rerank treatment): the vertex
-    # set and the per-round rank frame are both consumed TWICE per round
-    # (every round's plan re-embedded the nodes-distinct aggregate and the
-    # whole previous-round tree — 119 plan nodes, with the contrib_src
-    # distinct re-aggregated ~7×). Cutting lineage at the two narrow
-    # frames (|V| bigints; |V| (bigint, double) rows) makes each round
-    # start from a materialized RDD: plan linear in rounds, one distinct
-    # aggregate total. Values unchanged — a checkpoint replays the same
-    # computed rows. In-session 5-round interleave + cold interleaved A/B
-    # in scripts/ab_pagerank_r17.json.
-    nodes = durable_checkpoint(
-        contrib_src.select(F.col("src").alias("node")).distinct(), eager=False
-    )
-    n = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
-    ranks = nodes.crossJoin(F.broadcast(n)).select(
-        "node", (F.lit(1.0) / F.col("n_nodes")).alias("pr")
-    )
-    for _ in range(_ROUNDS):
-        c = (
-            contrib_src.join(
-                size_gated_broadcast(ranks.withColumnRenamed("node", "src")),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.sum(F.col("pr") / F.col("deg")).alias("s"))
-        )
-        ranks = durable_checkpoint(
-            nodes.crossJoin(F.broadcast(n))
-            .join(c.withColumnRenamed("dst", "node"), "node", "left")
+    n = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
+    per_edge = edges.join(deg, "src").crossJoin(F.broadcast(n))
+
+    def update(flow: DataFrame, pr) -> DataFrame:
+        return (
+            flow.groupBy(F.col("dst").alias("node"), "n_nodes")
+            .agg(F.sum(pr / F.col("deg")).alias("s"))
             .select(
                 "node",
+                "n_nodes",
                 (
-                    F.lit(0.15) / F.col("n_nodes")
-                    + F.lit(_DAMP) * F.coalesce(F.col("s"), F.lit(0.0))
+                    F.lit(0.15) / F.col("n_nodes") + F.lit(_DAMP) * F.col("s")
                 ).alias("pr"),
-            ),
-            eager=False,
+            )
         )
-    node_deg = contrib_src.select(
-        F.col("src").alias("node"), "deg"
-    ).distinct()
-    return (
-        ranks.join(node_deg, "node")
-        .crossJoin(F.broadcast(n))
-        .select(
-            F.col("node").alias("part"),
-            F.col("deg").alias("out_degree"),
-            F.round(F.col("pr") * F.col("n_nodes"), 4).alias("pr_norm"),
+
+    # no checkpoint between rounds: under AQE each one runs its input's
+    # shuffle stages, one job each, while the query is being built; one
+    # lazy plan that the action runs as a whole costs less at three rounds
+    ranks = update(per_edge, F.lit(1.0) / F.col("n_nodes"))
+    for _ in range(_ROUNDS - 1):
+        rank_side = size_gated_broadcast(
+            ranks.select(F.col("node").alias("src"), "pr")
         )
+        ranks = update(per_edge.join(rank_side, "src"), F.col("pr"))
+    return ranks.join(deg.withColumnRenamed("src", "node"), "node").select(
+        F.col("node").alias("part"),
+        F.col("deg").alias("out_degree"),
+        F.round(F.col("pr") * F.col("n_nodes"), 4).alias("pr_norm"),
     )
 
 
@@ -847,8 +827,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final count aggregate + one per-node window on the
     (node, label) pairs — ≤ N·K rows per round. The synchronous update
     needs no driver-side state: labels stay a DataFrame the whole loop,
-    and at 100 TB the per-round label frame gets the every-~5-rounds
-    checkpoint the PageRank loop documents. Every node has degree ≥ 1 by
+    as one lazy plan that the action runs. At 100 TB, checkpoint the label
+    frame every ~5 rounds to bound the plan and lineage, as the module
+    notes say for PageRank. Every node has degree ≥ 1 by
     k-NN construction, so the inner join loses no vertices."""
     sym, _, deg = _knn_graph(spark, sf_dir)
     labels = deg.select("node", F.col("node").alias("lbl"))

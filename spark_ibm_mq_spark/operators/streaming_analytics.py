@@ -205,11 +205,14 @@ def _run_to_memory(
     −8%, r9); a real deployment sizes this to cores × state volume
     (the partition count is baked into the checkpoint on first run).
 
-    The checkpoint is explicit ephemeral scratch (tmpfs-preferred, see
-    scratch_base): without it Spark picks a java.io.tmpdir temp checkpoint
-    on disk, and the offset/commit-log fsync per micro-batch dominates
-    these sub-second fixture drains (r10 streaming-family adjudication).
-    A production query replaces this with a durable HDFS/S3 checkpoint —
+    The checkpoint is explicit ephemeral scratch (`_scratch`, removed at
+    interpreter exit) rather than the temp checkpoint Spark would leave
+    under java.io.tmpdir. Its file system barely matters for speed: ext4
+    and tmpfs write checkpoint files within 10% of each other. The
+    per-file cost was the child processes Hadoop's default checkpoint
+    file manager starts without libhadoop, which the session's
+    FileSystem-based manager avoids (`session._RUNTIME_CONFS`). A
+    production query replaces this with a durable HDFS/S3 checkpoint —
     recovery semantics need it; a drain that returns within the call does
     not."""
     from spark_ibm_mq_spark.operators.mq_source import _scratch

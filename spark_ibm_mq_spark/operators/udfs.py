@@ -39,7 +39,8 @@ def _net_price_udf():
     "udf_pandas_net_price",
     oracle="""
     SELECT l_returnflag,
-           round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 4) AS net_total,
+           ((sum(CAST(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 1e6 + 0.5)
+                      AS BIGINT)) + 50) // 100) / 1e4 AS net_total,
            count(*) AS n
     FROM lineitem
     WHERE l_quantity >= 30
@@ -50,12 +51,26 @@ def udf_pandas_net_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar pandas UDF in the projection, aggregated after — the result is
     identical to pure SQL because the arithmetic is (the point of the check).
     The quantity filter still pushes into the scan: Catalyst keeps pushable
-    predicates below the Python eval."""
+    predicates below the Python eval.
+
+    Exactness (SCALE.md §7): a double sum depends on summation order, so
+    two engines can round the same total to neighbouring 1e-4 values when
+    it sits next to a rounding boundary. Each row's net price is therefore
+    quantized to micro-units, floor(net·1e6 + 0.5), before the sum; the sum
+    runs as decimal(38,0) (HUGEINT in DuckDB), and the half-up rounding to
+    1e-4 is integer arithmetic, (s + 50) div 100. Only the final scale to a
+    double is floating point, and it is one exact division in both
+    engines."""
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 30)
+    # one aggregate expression, not a projection after the aggregate: each
+    # extra DataFrame step costs the build another analysis pass
+    net_e4 = F.expr(
+        "(sum(CAST(floor(net * 1e6 + 0.5) AS DECIMAL(38,0))) + 50) div 100"
+    )
     return (
         li.withColumn("net", _net_price_udf()("l_extendedprice", "l_discount", "l_tax"))
         .groupBy("l_returnflag")
-        .agg(F.round(F.sum("net"), 4).alias("net_total"), F.count(F.lit(1)).alias("n"))
+        .agg((net_e4 / F.lit(1e4)).alias("net_total"), F.count(F.lit(1)).alias("n"))
     )
 
 

@@ -157,9 +157,10 @@ def arrow_batch_from_block(
     if b64.null_count == len(parsed):
         values = parsed["body"].combine_chunks()
     else:
-        # bytes bodies present: CCSID decode row-at-a-time (rare path —
-        # encoding tests; a production binary queue would decode via a
-        # vectorized pc.binary decode for fixed codecs)
+        # bytes bodies present: CCSID decode row-at-a-time. Every batch of
+        # a binary queue takes this path (the benchmark's `mq_drain` backlog
+        # is cp037); the single-byte CCSIDs could decode vectorized through
+        # a 256-entry table instead
         bodies = parsed["body"].to_pylist()
         b64l = b64.to_pylist()
         values = pa.array(

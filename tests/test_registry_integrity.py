@@ -1,8 +1,8 @@
 """Registry / driver-contract integrity guards.
 
-These catch the silent drifts the per-op checks can't: a typo in
-`_CHECK_FIRST` makes `_ordered` drop the name and the driver quietly
-checks a DIFFERENT 50th query; an operator edit committed without
+These catch the drifts the per-op checks can't: a typo in `_CHECK_FIRST`
+(which `_ordered` refuses, so the driver would fail to load the query
+list); an operator edit committed without
 `scripts/stable_tier.py --update` desyncs the freshness ledger the next
 round's window is built from.
 """
@@ -13,6 +13,8 @@ import importlib.util
 import json
 import os
 import sys
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -34,7 +36,16 @@ def _entry():
 def test_check_first_names_all_registered():
     e = _entry()
     missing = [n for n in e._CHECK_FIRST if n not in registry.QUERIES]
-    assert not missing, f"_CHECK_FIRST typos (silently dropped): {missing}"
+    assert not missing, f"_CHECK_FIRST typos: {missing}"
+
+
+def test_ordered_refuses_an_unknown_check_first_name(monkeypatch):
+    e = _entry()
+    monkeypatch.setattr(e, "_CHECK_FIRST", [*e._CHECK_FIRST, "no_such_query"])
+    with pytest.raises(ValueError, match="no_such_query"):
+        e.queries()
+    with pytest.raises(ValueError, match="no_such_query"):
+        e.oracle_sql()
 
 
 def test_window_is_exactly_50_distinct_oracled():
