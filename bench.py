@@ -14,6 +14,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import pyspark
+
 from spark_ibm_mq_spark import registry
 from spark_ibm_mq_spark.session import get_spark
 
@@ -129,22 +131,26 @@ def _committed_record(here: str) -> tuple[dict | None, str]:
 
 
 def _committed_baseline(
-    here: str, sf, rec_tier: tuple[dict | None, str] | None = None
+    here: str, sf, cpus: int, rec_tier: tuple[dict | None, str] | None = None
 ) -> tuple[dict[str, float], str]:
-    """Per-query medians from the last committed record (VERDICT r10
-    task 3) plus a provenance tag recorded in the output — a gate that
-    silently degraded to no-baseline would make `outlier_reruns: {}`
-    indistinguishable from "no outliers detected". Only a record at the
-    SAME scale factor counts (an sf0.01 record would flag every sf0.1
-    query as an outlier); the sf-mismatch tags and `none` are visible in
+    """Per-query medians from the last committed record plus a provenance
+    tag recorded in the output — a gate that silently degraded to
+    no-baseline would make `outlier_reruns: {}` indistinguishable from "no
+    outliers detected". Only a record at the SAME scale factor and the
+    SAME task-slot count (`provenance.cpus`) counts: an sf0.01 record would
+    flag every sf0.1 query as an outlier, and a 32-slot record every query
+    of a 4-slot run. A record without `cpus` cannot show it matches, so it
+    is refused too. The mismatch tags and `none` are visible in
     bench_full.json for exactly that reason. Pass a prefetched
     ``rec_tier`` to share one `_committed_record` fetch per run."""
     rec, tier = rec_tier if rec_tier is not None else _committed_record(here)
     if rec is None:
         return {}, "none"
-    if rec.get("sf") == sf:
-        return dict(rec.get("queries", {})), tier
-    return {}, f"{tier}-sf-mismatch"
+    if rec.get("sf") != sf:
+        return {}, f"{tier}-sf-mismatch"
+    if (rec.get("provenance") or {}).get("cpus") != cpus:
+        return {}, f"{tier}-cpus-mismatch"
+    return dict(rec.get("queries", {})), tier
 
 
 def _is_outlier(first: float, committed_median: float | None) -> bool:
@@ -409,6 +415,8 @@ def main() -> None:
         sf = sf_dir
     spark = get_spark("spark-ibm-mq-spark-bench")
     spark.sparkContext.setLogLevel("WARN")
+    # local[N]: the task slots every timing below ran on
+    cpus = spark.sparkContext.defaultParallelism
 
     timings: dict[str, float] = {}
     # warm the JVM + parquet footers once with the flagship query
@@ -453,7 +461,7 @@ def main() -> None:
     here = os.path.dirname(os.path.abspath(__file__))
     committed_rec_tier = _committed_record(here)
     baseline, baseline_source = _committed_baseline(
-        here, sf, committed_rec_tier
+        here, sf, cpus, committed_rec_tier
     )
     outlier_reruns: dict[str, dict[str, float]] = {}
     for name, first in sorted(timings.items()):
@@ -510,6 +518,13 @@ def main() -> None:
         # record with who ran it and when; compare only same-labelled runs
         # (or scripts/ab_bench.py interleaved pairs) round-over-round.
         "provenance": {
+            # timings from different core counts are never compared:
+            # `cpus` gates the outlier baseline (_committed_baseline);
+            # `nproc` is the cores the process may use, `pyspark` the
+            # engine version
+            "cpus": cpus,
+            "nproc": len(os.sched_getaffinity(0)),
+            "pyspark": pyspark.__version__,
             # machine-speed stamps for normalized record comparison
             # (_ambient_calibration doc): ratio-of-calibrations between
             # two records estimates their ambient speed difference

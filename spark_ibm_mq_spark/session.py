@@ -1,9 +1,10 @@
 """SparkSession helpers.
 
-Scale posture: these configs are what we'd set on a 1000-executor cluster,
-expressed here for local[32]. AQE handles runtime re-planning (skew joins,
-shuffle coalescing); shuffle partitions are sized so an sf0.1 partition fits
-comfortably in memory and would be raised (or left to AQE) at 100 TB.
+Scale posture: these are the confs a cluster deployment would set, applied
+to one local JVM with `local[$SPARK_GRAFT_CPUS]` task slots. AQE handles
+runtime re-planning (skew joins, shuffle coalescing); shuffle partitions
+match the task slots, so an sf0.1 partition fits comfortably in memory,
+and would be raised (or left to AQE) at cluster scale.
 """
 
 from __future__ import annotations
@@ -12,6 +13,17 @@ import os
 import tempfile
 
 from pyspark.sql import SparkSession
+
+# Generated classes the JVM keeps compiled. Spark's default is 100, and
+# the benchmark's 13-query panel makes ~225 distinct classes a pass, so the
+# LRU cache evicted every one before its query ran again and each pass
+# recompiled them all with Janino: 223 compiles and 6.2-7.1 s a warm pass
+# on 4 cores, against 0-18 compiles and 4.3-5.7 s at 2000. A static conf:
+# Spark's `CodeGenerator` sizes its cache once, when the JVM first
+# generates code, so only the session builder can set it; `spark.conf.set`
+# on a running session refuses it, which is why it is not in
+# `_RUNTIME_CONFS`.
+_CODEGEN_CACHE_ENTRIES = "2000"
 
 # Runtime-settable confs applied to ANY session (including the driver's) so
 # oracle comparisons are deterministic: UTC session time, ANSI off (we want
@@ -60,7 +72,7 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
 
 
 def get_spark(app_name: str = "spark-ibm-mq-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or get) a local session sized for this container."""
+    """Build (or get) a local session with `SPARK_GRAFT_CPUS` task slots."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
@@ -68,11 +80,14 @@ def get_spark(app_name: str = "spark-ibm-mq-spark", shuffle_partitions: int | No
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # local[32] runs every task in the driver JVM: an undersized heap
-        # turns the pair-heavy dedup queries into GC churn (3× run-to-run
-        # variance observed at 8g); the container has 128 GiB
+        # Local mode runs every task in the driver JVM, so the driver heap
+        # is the whole cluster's memory: an undersized one turns the
+        # pair-heavy dedup queries into GC churn (3× run-to-run variance
+        # at 8g). It is a ceiling the heap grows into, not a reservation;
+        # SPARK_DRIVER_MEMORY lowers it on a smaller host.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", _CODEGEN_CACHE_ENTRIES)
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

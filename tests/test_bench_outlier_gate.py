@@ -1,6 +1,6 @@
-"""Unit tests for bench.py's outlier re-run gate (VERDICT r10 task 3):
-the rule that keeps a single ambient I/O spike out of the committed
-bench history, and the baseline loader's same-sf guard."""
+"""Unit tests for bench.py's outlier re-run gate: the rule that keeps a
+single ambient I/O spike out of the committed bench history, and the
+baseline loader's same-sf and same-cpus guards."""
 
 from __future__ import annotations
 
@@ -44,57 +44,77 @@ def test_outlier_scoring_clamps_at_committed_median():
     assert _score_outlier(6.00, 3.00, 1.72) == 3.00
 
 
-def test_committed_baseline_requires_same_sf(tmp_path):
-    """A committed sf0.1 record must NOT gate an sf0.01 run (every query
-    would read 'fast') nor vice versa (every query would read 'outlier')."""
-    repo = tmp_path / "r"
+def _record(q1: float, **provenance) -> str:
+    prov = {"cpus": 4, **provenance}
+    return json.dumps({"sf": 0.1, "queries": {"q1": q1}, "provenance": prov})
+
+
+def _commit_record(repo, text: str) -> None:
     repo.mkdir()
     subprocess.run(["git", "-C", str(repo), "init", "-q"], check=True)
-    rec = {"sf": 0.1, "queries": {"q1": 1.5}}
-    (repo / "bench_full.json").write_text(json.dumps(rec))
+    (repo / "bench_full.json").write_text(text)
     subprocess.run(["git", "-C", str(repo), "add", "-A"], check=True)
     subprocess.run(
         ["git", "-C", str(repo), "-c", "user.email=t@t", "-c", "user.name=t",
          "commit", "-qm", "x"],
         check=True,
     )
-    assert _committed_baseline(str(repo), 0.1) == ({"q1": 1.5}, "HEAD")
+
+
+def test_committed_baseline_requires_same_sf(tmp_path):
+    """A committed sf0.1 record must NOT gate an sf0.01 run (every query
+    would read 'fast') nor vice versa (every query would read 'outlier')."""
+    repo = tmp_path / "r"
+    _commit_record(repo, _record(1.5))
+    assert _committed_baseline(str(repo), 0.1, 4) == ({"q1": 1.5}, "HEAD")
     # a record at the wrong sf is NOT a baseline, and the provenance tag
     # must say so — "HEAD" with an empty map would be indistinguishable
     # from a clean gate run
-    assert _committed_baseline(str(repo), 0.01) == ({}, "HEAD-sf-mismatch")
+    assert _committed_baseline(str(repo), 0.01, 4) == ({}, "HEAD-sf-mismatch")
+
+
+def test_committed_baseline_requires_same_cpus(tmp_path):
+    """A record taken on another core count must not gate this run: a
+    32-slot baseline would flag every query of a 4-slot run as an
+    outlier, and a 4-slot one would hide a 32-slot spike."""
+    repo = tmp_path / "r"
+    _commit_record(repo, _record(1.5, cpus=32))
+    assert _committed_baseline(str(repo), 0.1, 32) == ({"q1": 1.5}, "HEAD")
+    assert _committed_baseline(str(repo), 0.1, 4) == ({}, "HEAD-cpus-mismatch")
+    # the sf guard still speaks first
+    assert _committed_baseline(str(repo), 0.01, 4) == ({}, "HEAD-sf-mismatch")
+
+
+def test_committed_baseline_without_cpus_is_refused(tmp_path):
+    """A record stamped before `provenance.cpus` existed cannot show it
+    ran on this core count, so it is no baseline either."""
+    repo = tmp_path / "r"
+    _commit_record(repo, json.dumps({"sf": 0.1, "queries": {"q1": 1.5}}))
+    assert _committed_baseline(str(repo), 0.1, 4) == ({}, "HEAD-cpus-mismatch")
+    d = tmp_path / "plain"
+    d.mkdir()
+    (d / "bench_full.json").write_text(
+        json.dumps({"sf": 0.1, "queries": {"q1": 2.0}, "provenance": {}})
+    )
+    assert _committed_baseline(str(d), 0.1, 4) == ({}, "worktree-cpus-mismatch")
 
 
 def test_committed_baseline_prefers_head_over_worktree(tmp_path):
     """A dirty working-tree bench_full.json (mid-session run) must not
     move the goalposts: HEAD's record wins."""
     repo = tmp_path / "r"
-    repo.mkdir()
-    subprocess.run(["git", "-C", str(repo), "init", "-q"], check=True)
-    (repo / "bench_full.json").write_text(
-        json.dumps({"sf": 0.1, "queries": {"q1": 1.5}})
-    )
-    subprocess.run(["git", "-C", str(repo), "add", "-A"], check=True)
-    subprocess.run(
-        ["git", "-C", str(repo), "-c", "user.email=t@t", "-c", "user.name=t",
-         "commit", "-qm", "x"],
-        check=True,
-    )
+    _commit_record(repo, _record(1.5))
     # overwrite the worktree copy with a slower record
-    (repo / "bench_full.json").write_text(
-        json.dumps({"sf": 0.1, "queries": {"q1": 9.9}})
-    )
-    assert _committed_baseline(str(repo), 0.1) == ({"q1": 1.5}, "HEAD")
+    (repo / "bench_full.json").write_text(_record(9.9))
+    assert _committed_baseline(str(repo), 0.1, 4) == ({"q1": 1.5}, "HEAD")
 
 
 def test_committed_baseline_no_git_falls_back_to_file(tmp_path):
     d = tmp_path / "plain"
     d.mkdir()
-    (d / "bench_full.json").write_text(
-        json.dumps({"sf": 0.1, "queries": {"q1": 2.0}})
-    )
-    assert _committed_baseline(str(d), 0.1) == ({"q1": 2.0}, "worktree")
-    assert _committed_baseline(str(tmp_path / "missing"), 0.1) == ({}, "none")
+    (d / "bench_full.json").write_text(_record(2.0))
+    assert _committed_baseline(str(d), 0.1, 4) == ({"q1": 2.0}, "worktree")
+    assert _committed_baseline(str(tmp_path / "missing"), 0.1, 4) == ({}, "none")
 
 
 def test_calibration_verdict_labels_degraded_runs():
@@ -377,8 +397,9 @@ def test_compact_line_keeps_headline_dedup_family():
     query set can no longer shrink as history accumulates."""
     from bench import _compact_line
 
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(here, "bench_full.json")) as f:
+    # a frozen record: the live bench_full.json is rewritten by every run
+    here = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(here, "fixtures", "bench_full.json")) as f:
         full = json.load(f)
     line = _compact_line(full)
     assert len(line) <= 1900
