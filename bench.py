@@ -240,29 +240,26 @@ def _ambient_membw_calibration() -> float:
 
 
 _CALIB_DEGRADED_RATIO = 1.25
-# Reference carry-forward window (ADVICE r13 #2): the verdict's reference
-# used to be a monotone min over ALL history (probes + each prior verdict's
-# committed_best), so one anomalously fast probe — a turbo burst, cold-cache
-# luck — ratcheted the reference fast FOREVER and labeled every later
-# normal-speed run degraded with no recovery path. The reference is now the
-# min over the last N records' best probes (carried as probe_history in the
-# verdict): an outlier ages out after N records, and a consistent streak of
-# slower-than-old-reference runs re-baselines once the outlier leaves the
+# Reference window: a monotone min over ALL history would let one
+# anomalously fast probe — a turbo burst, cold-cache luck — ratchet the
+# reference fast forever and label every later normal-speed run degraded.
+# The reference is the min over the last N records' best probes (carried as
+# probe_history in the verdict): an outlier ages out after N records, and a
+# consistent streak of slower runs re-baselines once the outlier leaves the
 # window — while a single committed degraded record still cannot launder the
 # next equally-slow run (the healthy records' probes remain in the window).
 _CALIB_HISTORY_N = 5
 
 
 def _probe_verdict(
-    start: float | None,
-    end: float | None,
+    start: float,
+    end: float,
     probes: dict,
     prior: dict,
     start_key: str,
     end_key: str,
     hist_key: str,
-    legacy_best_key: str | None,
-) -> dict | None:
+) -> dict:
     """One probe kind's verdict (shared by the CPU and membw legs).
 
     The run's ambient speed is the WORSE (max) of its start/end probes —
@@ -272,16 +269,10 @@ def _probe_verdict(
     probes). Degraded records still get committed by design, and their
     probes enter the history too — the min over the window ignores them
     while any healthy probe remains, so a single slow committed record
-    cannot launder the next equally-slow run; but unlike the old
-    unbounded carry-forward, an anomalously FAST probe ages out of the
-    window after N records instead of poisoning the label forever
-    (ADVICE r13 #2). Pre-history records (≤r13) fall back to the legacy
-    ``committed_best`` carry for one transition round. Returns None when
-    this run took no such probe (membw on a pre-upgrade replay)."""
-    if start is None and end is None:
-        return None
-    cur_vals = [v for v in (start, end) if isinstance(v, (int, float))]
-    current = round(max(cur_vals), 4)
+    cannot launder the next equally-slow run; but unlike an unbounded
+    carry-forward, an anomalously FAST probe ages out of the window
+    after N records instead of poisoning the label forever."""
+    current = round(max(start, end), 4)
     hist = [
         v
         for v in (prior.get(hist_key) or [])
@@ -291,16 +282,8 @@ def _probe_verdict(
         v
         for v in (probes.get(start_key), probes.get(end_key))
         if isinstance(v, (int, float))
-    ]
-    if hist:
-        ref_vals += hist
-    elif legacy_best_key is not None:
-        legacy = prior.get(legacy_best_key)
-        if isinstance(legacy, (int, float)):
-            ref_vals.append(legacy)
-    new_hist = (hist + ([min(cur_vals)] if cur_vals else []))[
-        -_CALIB_HISTORY_N:
-    ]
+    ] + hist
+    new_hist = (hist + [min(start, end)])[-_CALIB_HISTORY_N:]
     if not ref_vals:
         return {
             "status": "no-reference",
@@ -323,86 +306,42 @@ def _calibration_verdict(
     calib_start: float,
     calib_end: float,
     committed_provenance: dict | None,
-    membw_start: float | None = None,
-    membw_end: float | None = None,
+    membw_start: float,
+    membw_end: float,
 ) -> dict:
     """Compare this run's ambient-calibration probes against the last
-    COMMITTED record's and say whether the run is DEGRADED (VERDICT r12
-    task 4: the r12 driver record's 308.8 s total stood unlabeled next to
-    a 214.4 s same-code total, on a host whose own probe read 32 % slower
-    — act on the probe instead of leaving adjudication to the reader).
+    COMMITTED record's and say whether the run is DEGRADED: a total
+    measured on a host whose own probe reads 30 % slower must carry that
+    label, not leave adjudication to the reader.
 
-    Two probe legs since r14 (VERDICT r13 task 3): the BLAS/CPU probe and
-    the memory-bandwidth probe, each judged worst-current vs
-    bounded-window-best by :func:`_probe_verdict`; the record is labeled
-    degraded if EITHER leg degrades (r13's blind spot: two records with
-    healthy CPU probes carried 1.28-1.35x broad inflation — memory-side
-    contention only the membw leg can see). Labels, never refuses: a
-    driver-invoked run must still emit a record, but one that carries its
-    own health verdict. No committed probe (pre-r12 records, fresh
+    Two probe legs: the BLAS/CPU probe and the memory-bandwidth probe,
+    each judged worst-current vs bounded-window-best by
+    :func:`_probe_verdict`; the record is labeled degraded if EITHER leg
+    degrades (a healthy CPU probe can sit beside 1.3x broad inflation
+    from memory-side contention that only the membw leg sees). Labels,
+    never refuses: a driver-invoked run must still emit a record, but one
+    that carries its own health verdict. No committed probe (fresh
     checkout) ⇒ explicitly ``no-reference``, never silently healthy."""
     probes = (committed_provenance or {}).get("ambient_calibration_sec") or {}
     prior = (committed_provenance or {}).get("ambient_verdict") or {}
-    cpu = _probe_verdict(
-        calib_start,
-        calib_end,
-        probes,
-        prior,
-        "start",
-        "end",
-        "probe_history",
-        "committed_best",
+    out = _probe_verdict(
+        calib_start, calib_end, probes, prior, "start", "end", "probe_history"
     )
-    out = dict(cpu)
-    membw = _probe_verdict(
+    out["membw"] = _probe_verdict(
         membw_start,
         membw_end,
         probes,
-        # membw had no legacy committed_best — only the history carries
         prior.get("membw") or {},
-        # v2 keys: the r14 review's copyto fix HALVED the probe's scale
-        # (the old per-iteration a.copy() timed ~65k page faults on top
-        # of bandwidth), so old-method values must never serve as
-        # references for new-method probes — versioned key names keep
-        # the r14 record's old-scale membw fields inert and the gate
-        # re-seeds honestly (one no-reference round, then active).
+        # v2 keys: the copyto probe halved the old per-iteration
+        # a.copy() probe's scale (that one also timed ~65k page faults),
+        # so old-method values must never serve as references for
+        # new-method probes
         "membw2_start",
         "membw2_end",
         "membw2_probe_history",
-        None,
     )
-    if membw is not None:
-        out["membw"] = membw
-        if membw["status"] == "degraded":
-            out["status"] = "degraded"
-    else:
-        # a run WITHOUT membw probes (pre-upgrade replay) must not break
-        # the history chain: committing its record would otherwise drop
-        # the accumulated membw2_probe_history and silently reset the
-        # membw gate to no-reference for the next probed run — reopening
-        # the r13 blind spot for a round (r14 review finding). Carry the
-        # prior history forward, clearly labeled as not this run's
-        # verdict — but only for _CALIB_HISTORY_N consecutive probe-less
-        # records (ADVICE r14 #2: an unbounded carry freezes a stale
-        # fast probe from an old host epoch indefinitely, partially
-        # resurrecting the unbounded-ratchet problem the bounded window
-        # fixed; after N carries the reference honestly expires to
-        # no-reference, mirroring the window's own N-record horizon).
-        prior_membw = prior.get("membw") or {}
-        carried_n = prior_membw.get("carried_records", 0)
-        if not isinstance(carried_n, int) or carried_n < 0:
-            carried_n = 0
-        hist = [
-            v
-            for v in (prior_membw.get("membw2_probe_history") or [])
-            if isinstance(v, (int, float))
-        ][-_CALIB_HISTORY_N:]
-        if hist and carried_n < _CALIB_HISTORY_N:
-            out["membw"] = {
-                "status": "carried-no-probe",
-                "membw2_probe_history": hist,
-                "carried_records": carried_n + 1,
-            }
+    if out["membw"]["status"] == "degraded":
+        out["status"] = "degraded"
     return out
 
 

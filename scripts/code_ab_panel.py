@@ -2,12 +2,12 @@
 task 2): separate host ambient from code regression for the r13 record's
 +23.6 % total vs the r12 best (662cf79).
 
-Protocol (the sig_strategy_ab.py discipline, lifted to whole-tree arms):
-fresh subprocess + fresh Spark session per pass, arms strictly
-alternating with the leading arm swapped every pair (H,O then O,H ...),
-so slow ambient drift cancels pairwise; per-query statistic is
-min-of-samples per arm (least-contended sample) plus the median of
-adjacent-pair ratios. A pairwise median ratio ≈ 1.0 across the panel
+Protocol: each pass runs one whole tree (an arm) in a fresh subprocess
+with a fresh Spark session. Arms strictly alternate, and the leading arm
+swaps every pair (H,O then O,H ...), so slow ambient drift cancels
+pairwise. Per query, each arm reports its min over samples (the least
+contended one), and the pair reports the median of adjacent-pair
+ratios. A pairwise median ratio ≈ 1.0 across the panel
 says HOST (the two trees run the same speed when measured seconds
 apart); a consistent >1 ratio on specific queries says CODE and names
 the queries.

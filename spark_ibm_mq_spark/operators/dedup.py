@@ -2,11 +2,12 @@
 
 Exact, n-gram-Jaccard, MinHash+LSH, SimHash, and embedding-cosine near-dup —
 the large-scale training-data-pipeline surface. Exact + Jaccard + cosine are
-fully oracle-checked; the xxhash64 MinHash and SimHash are rows-only
-(xxhash64 has no DuckDB equivalent) with an exact re-check inside the query,
-and `dedup_minhash_lsh_md5` runs the same MinHash+LSH funnel on md5 —
-bit-identical across engines — for a full value-parity oracle of the sketch
-pipeline itself.
+fully oracle-checked. The MinHash+LSH queries share one funnel,
+`_minhash_funnel`, on one of two hash families. The xxhash64 MinHash
+(`dedup_minhash_lsh`) and SimHash are rows-only (xxhash64 has no DuckDB
+equivalent) with an exact re-check inside the query; md5 is bit-identical
+across engines and gives `dedup_minhash_lsh_md5` a full value-parity oracle
+of the sketch pipeline itself.
 
 Scale notes: every pairwise operator here avoids the naive O(n²) cross join
 — pairs are generated through an equi-join on a shared token / band / bucket
@@ -152,48 +153,42 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_MINHASH = 16
 _BANDS = 4  # 4 bands × 4 rows: P(candidate) = 1-(1-j⁴)⁴ — steep around j≈0.7
 
-# Session memo for the xxhash funnel — the md5 funnel's FULL strategy
-# (r15, applied in two measured steps): the sig checkpoint alone fixed
-# the fresh-session solo profile (scripts/sig_ab_xxhash_r15.json: 6.1s
-# vs 19.9s) but in-bench numbers stayed high because each of the 3 timed
-# runs re-ran the band self-join + distinct over the shared sig; the
-# twin checkpoints BOTH halves (sig AND cand) behind one session memo
-# and held 4.9s in the same degraded session where the sig-only variant
-# read 32s. Mirror _MD5_FUNNEL_MEMO exactly.
-_XXHASH_FUNNEL_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
+# (sig, cand) per (application, corpus, hash family), shared by
+# `dedup_minhash_lsh` (xxhash64) and, on md5, `dedup_minhash_lsh_md5`,
+# `dedup_minhash_recall_eval` and `dedup_lsh_band_profile`.
+_FUNNEL_MEMO: dict[tuple[str, str, str], tuple[DataFrame, DataFrame]] = {}
 
 
-
-def _sig_agreement(a: str, b: str):
-    """Count of agreeing signature positions — the LSH Jaccard estimator's
-    numerator. r16 opt: when both arrays have exactly _N_MINHASH elements
-    (always, by construction) the count is emitted as a statically
-    unrolled 16-term integer sum of element equalities — plain codegen'd
-    comparisons instead of an interpreted zip_with+filter per candidate
-    pair (the estimate runs once per band-join candidate, millions of
-    times per action). The fold arm is kept as the guarded fallback, so
-    the value is identical for any array length. Integer arithmetic —
-    bit-identity is trivial."""
-    a_c, b_c = F.col(a), F.col(b)
-    fold = F.size(F.filter(F.zip_with(a_c, b_c, lambda x, y: x == y), lambda m: m))
-    unrolled = None
-    for i in range(_N_MINHASH):
-        term = F.when(a_c[i] == b_c[i], 1).otherwise(0)
-        unrolled = term if unrolled is None else unrolled + term
-    return F.when(
-        (F.size(a_c) == _N_MINHASH) & (F.size(b_c) == _N_MINHASH), unrolled
-    ).otherwise(fold)
+def _band_hashes(family: str, bands: int, rows: int) -> list:
+    """One hash column per band over `rows` consecutive `sig` elements.
+    xxhash64 takes the elements as its arguments; md5 takes one string,
+    so it hashes their concatenation (its DuckDB twin is
+    :func:`_md5_funnel_ctes`)."""
+    band_hash = {
+        "md5": lambda *cols: F.md5(F.concat(*cols)),
+        "xxhash64": F.xxhash64,
+    }[family]
+    return [
+        band_hash(*[F.element_at("sig", b * rows + r + 1) for r in range(rows)])
+        for b in range(bands)
+    ]
 
 
-def _xxhash_minhash_funnel(
-    spark: SparkSession, sf_dir: str
+def _minhash_funnel(
+    spark: SparkSession, sf_dir: str, family: str
 ) -> tuple[DataFrame, DataFrame]:
-    """(sig, cand): sig = (doc_id, toks, 16-xxhash64-minhash array),
-    checkpointed behind the shared `_SIG_CHECKPOINT` flag; cand =
-    DISTINCT band-collision (doc_a, doc_b), checkpointed. The xxhash
-    mirror of `_md5_minhash_funnel` (same rationale, same A/B protocol;
-    evidence scripts/sig_ab_xxhash_r15.json and the in-bench twin
-    comparison in the consumer's docstring)."""
+    """(sig, cand) of the MinHash+LSH funnel on hash `family` ("md5" or
+    "xxhash64"): sig = (doc_id, toks, 16-minhash array), each minhash the
+    min over the doc's tokens of hash(f"s{i}:" + token); cand = DISTINCT
+    band-collision (doc_a, doc_b). Both are checkpointed and memoized
+    per session. Candidate volume ∝ band collisions, never n².
+
+    Signatures are computed per row (`transform` + `array_min` over the
+    token array) instead of explode→groupBy: no shuffle for the
+    signature stage, and the doc→signature map stays in one codegen
+    stage."""
+    token_hash = {"md5": F.md5, "xxhash64": F.xxhash64}[family]
+
     def build():
         d = load_table(spark, sf_dir, "documents")
         # spread rows before the (CPU-heavy) per-row hashing so every core
@@ -208,42 +203,31 @@ def _xxhash_minhash_funnel(
 
         def _minhash(i: int):
             return F.array_min(
-                F.transform(
-                    "toks", lambda t: F.xxhash64(F.concat(F.lit(f"s{i}:"), t))
-                )
+                F.transform("toks", lambda t: token_hash(F.concat(F.lit(f"s{i}:"), t)))
             )
 
-        rows_per_band = _N_MINHASH // _BANDS
-        # the trailing repartition is a reuse point, not a distribution
-        # need: the consumers (band-join sides, feature attaches) share
-        # this exchange via ReuseExchange within one action — and the
-        # checkpoint + memo make the 16×|corpus| token hashing run ONCE
-        # per session rather than once per action
-        sig = spread(
-            arrs.select(
+        # sig is checkpointed because up to three actions read it (cand's
+        # materialization, the verify join, the band-profile sweep) and
+        # ReuseExchange shares an exchange only within one action: a lazy
+        # sig would redo 16 hashes per token once per action. The
+        # trailing repartition is the reuse point for the consumers
+        # inside one action (band-join sides, feature attaches).
+        sig = durable_checkpoint(
+            spread(
+                arrs.select(
+                    "doc_id",
+                    "toks",
+                    F.array(*[_minhash(i) for i in range(_N_MINHASH)]).alias("sig"),
+                ),
                 "doc_id",
-                "toks",
-                F.array(*[_minhash(i) for i in range(_N_MINHASH)]).alias("sig"),
+                force=True,
             ),
-            "doc_id",
-            force=True,
+            eager=False,
         )
-        if _SIG_CHECKPOINT:
-            sig = durable_checkpoint(sig, eager=False)
         bands = sig.select(
             "doc_id",
             F.posexplode(
-                F.array(
-                    *[
-                        F.xxhash64(
-                            *[
-                                F.element_at("sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        )
-                        for b in range(_BANDS)
-                    ]
-                )
+                F.array(*_band_hashes(family, _BANDS, _N_MINHASH // _BANDS))
             ).alias("band", "band_hash"),
         )
         cand = durable_checkpoint(
@@ -264,57 +248,31 @@ def _xxhash_minhash_funnel(
         return sig, cand
 
     return session_memo(
-        _XXHASH_FUNNEL_MEMO,
-        (spark.sparkContext.applicationId, sf_dir),
+        _FUNNEL_MEMO,
+        (spark.sparkContext.applicationId, sf_dir, family),
         build,
     )
 
 
-@register("dedup_minhash_lsh")  # rows-only: xxhash64 has no DuckDB twin
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash + LSH near-dup: token set → 16 minhashes (xxhash64 with seed
-    prefixes) → 4 bands → band-equality join → exact-Jaccard verification of
-    candidates. The band join is the scale path: candidates ∝ colliding
-    bands, not n². Verified output = (doc_a, doc_b, est_jaccard, jaccard).
-    Driver does a rows-only check; the exact re-verification inside the
-    query is the correctness guard.
-
-    Signatures are computed per-row (`transform` + `array_min` over the
-    token array) instead of explode→groupBy: zero shuffles for the
-    signature stage, and the whole doc→signature map stays inside one
-    codegen stage — at 100 TB this removes a full-corpus token shuffle.
-
-    Bench note: the fixture corpus is drawn from a 31-word vocabulary, so
-    documents are adversarially self-similar — at sf0.1 the 5 000 docs
-    yield ~4.2 M pairs that genuinely pass banding AND the est-Jaccard
-    prune AND exact verification — output-volume bound, not candidate
-    explosion: on a real-corpus similarity distribution the same plan
-    emits orders of magnitude fewer pairs per doc.
-
-    The funnel's expensive halves are CHECKPOINTED + SESSION-MEMOIZED
-    since r15 (the md5 twin's FULL strategy — `_xxhash_minhash_funnel`,
-    mirror of `_md5_minhash_funnel`), applied in two measured steps per
-    VERDICT r14 task 4: the r15 healthy-ambient record read this query
-    at 17.0 s first / 22.3 s rerun vs its 4.9 s committed median — past
-    the r14 watch bar — while the md5 twin sat at 3.8 s in the same
-    record. Step 1, sig checkpoint: fixed fresh-session solos
-    (scripts/sig_ab_xxhash_r15.json: ckpt 6.1 s vs lazy 19.9 s median)
-    but in-bench stayed high — each timed run re-ran the band join over
-    the shared sig (the sig-only variant read 32 s in a degraded-ambient
-    session where the fully-memoized twin held 4.9 s). Step 2, cand
-    checkpoint + funnel memo: bench-style 3-run profile back to ~4.7 s
-    median, the twin's level."""
-    sig, cand = _xxhash_minhash_funnel(spark, sf_dir)
-    # attach (signature, tokens) per side; est = signature agreement,
-    # exact re-check = one array_intersect per candidate pair — candidate
-    # set is small, so these joins broadcast under AQE
+def _verify_candidates(sig: DataFrame, cand: DataFrame) -> DataFrame:
+    """The funnel's estimate → verify tail: attach (signature, tokens) to
+    both sides of each candidate pair, prune at signature agreement
+    est_jaccard ≥ 0.5, then keep exact token Jaccard ≥ 0.7. Output
+    (doc_a, doc_b, est_jaccard, jaccard)."""
     fa = sig.select(
         F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"), F.col("toks").alias("ta")
     )
     fb = sig.select(
         F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"), F.col("toks").alias("tb")
     )
-    est = _sig_agreement("sa", "sb") / float(_N_MINHASH)
+    # agreeing signature positions as an unrolled 16-term sum: codegen'd
+    # comparisons instead of an interpreted zip_with+filter, once per
+    # candidate pair
+    agree = [
+        F.when(F.col("sa")[i] == F.col("sb")[i], 1).otherwise(0)
+        for i in range(_N_MINHASH)
+    ]
+    est = sum(agree[1:], start=agree[0]) / float(_N_MINHASH)
     inter = F.size(F.array_intersect("ta", "tb"))
     jac = inter / (F.size("ta") + F.size("tb") - inter)
     # per-doc features broadcast: the candidate-pair side is the big side
@@ -339,161 +297,66 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-# The md5 MinHash funnel's expensive halves, shared by the oracled twin
-# (`dedup_minhash_lsh_md5`), the candidate-quality eval
-# (`dedup_minhash_recall_eval`), and the banding-geometry sweep
-# (`dedup_lsh_band_profile`): the 16-md5-per-doc signature frame and
-# the distinct band-join candidate pairs each materialize once per
-# session — same memo discipline as _LABELS_MEMO/_PAIRS_MEMO. BOTH
-# halves checkpoint since r13 (see the in-function A/B note: the lazy
-# sig that won at two consumers loses at three).
-_MD5_FUNNEL_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-# The sig strategy lives in a FLAG so scripts/sig_strategy_ab.py can still
-# measure the superseded lazy arm against the live one (a committed A/B
-# tool whose variants silently both run the winner cannot reproduce the
-# measurement that picked it). Production value: True (checkpointed).
-_SIG_CHECKPOINT = True
-
-
-def _md5_minhash_funnel(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(sig, cand): sig = (doc_id, toks, 16-md5 minhash array),
-    checkpointed (lazily, at the first consumer action); cand = DISTINCT
-    band-collision (doc_a, doc_b), checkpointed. Candidate volume ∝ band
-    collisions, never n²."""
-    def build():
-        d = load_table(spark, sf_dir, "documents")
-        arrs = spread(
-            d.select(
-                "doc_id",
-                F.array_distinct(F.split(F.trim("text"), "\\s+")).alias("toks"),
-            ),
-            "doc_id",
-        )
-
-        def _mh(i: int):
-            return F.array_min(
-                F.transform(
-                    "toks", lambda t: F.md5(F.concat(F.lit(f"s{i}:"), t))
-                )
-            )
-
-        rows_per_band = _N_MINHASH // _BANDS
-        # sig IS checkpointed (reversal of the r11 lazy decision,
-        # re-measured per VERDICT r12 task 2 after dedup_lsh_band_profile
-        # became a THIRD sig consumer): a ReuseExchange shares sig only
-        # WITHIN one action, so the lazy form recomputes 16 md5/token once
-        # per consumer ACTION — 3x at current count (cand materialization,
-        # lsh_md5, band_profile) — where the checkpoint materializes once
-        # and reads blocks after. scripts/sig_strategy_ab.py, alternating
-        # fresh sessions at sf0.1, 10 cold + 6 warm pairs: ckpt wins 8/10
-        # cold and 4/6 warm pairs; min-of-samples (the robust estimator
-        # under this host's one-sided ambient noise, same rationale as
-        # bench.py's calibration probe) reads cold 21.4s vs 36.5s
-        # family-sum (-41%) and warm 10.4s vs 11.6s (-10%). At 100 TB the
-        # gap widens with every added consumer: one columnar write vs k
-        # full md5 passes. The r11 counter-evidence (ckpt ratio 3.21 vs
-        # lazy 1.38) predates the third consumer.
-        sig = spread(
-            arrs.select(
-                "doc_id",
-                "toks",
-                F.array(*[_mh(i) for i in range(_N_MINHASH)]).alias("sig"),
-            ),
-            "doc_id",
-            force=True,
-        )
-        if _SIG_CHECKPOINT:
-            sig = durable_checkpoint(sig, eager=False)
-        bands = sig.select(
-            "doc_id",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.md5(
-                            F.concat(
-                                *[
-                                    F.element_at(
-                                        "sig", b * rows_per_band + r + 1
-                                    )
-                                    for r in range(rows_per_band)
-                                ]
-                            )
-                        )
-                        for b in range(_BANDS)
-                    ]
-                )
-            ).alias("band", "band_hash"),
-        )
-        cand = durable_checkpoint(
-            bands.alias("x")
-            .join(
-                bands.alias("y"),
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.band_hash") == F.col("y.band_hash"))
-                & (F.col("x.doc_id") < F.col("y.doc_id")),
-            )
-            .select(
-                F.col("x.doc_id").alias("doc_a"),
-                F.col("y.doc_id").alias("doc_b"),
-            )
-            .distinct(),
-            eager=False,
-        )
-        return sig, cand
-
-    return session_memo(
-        _MD5_FUNNEL_MEMO,
-        (spark.sparkContext.applicationId, sf_dir),
-        build,
+def _md5_funnel_ctes(geometries=((_BANDS, _N_MINHASH // _BANDS),)) -> str:
+    """DuckDB twin of the md5 funnel as CTE text: `sig (doc_id, toks,
+    sig)`, `bands (doc_id, bands, rpb, band, band_hash)` with one row per
+    (doc, geometry, band) for each (bands, rows) geometry, and `cand`, the
+    distinct pairs that share a band hash within one geometry."""
+    minhashes = ",\n           ".join(
+        f"list_aggregate(list_transform(toks, t -> md5('s{i}:' || t)), 'min')"
+        for i in range(_N_MINHASH)
     )
-
-
-@register(
-    "dedup_minhash_lsh_md5",
-    oracle="""
-    WITH toks AS (
+    per_geometry = []
+    for b, r in geometries:
+        idx = ", ".join(str(k) for k in range(b))
+        hashes = ", ".join(
+            "md5(" + "||".join(f"sig[{k * r + i + 1}]" for i in range(r)) + ")"
+            for k in range(b)
+        )
+        per_geometry.append(
+            f"SELECT doc_id, {b} AS bands, {r} AS rpb,"
+            f" unnest([{idx}]) AS band, unnest([{hashes}]) AS band_hash FROM sig"
+        )
+    return f"""doc_toks AS (
         SELECT doc_id, list_distinct(string_split_regex(trim(text), '\\s+')) AS toks
         FROM documents
     ),
     sig AS (
         SELECT doc_id, toks,
-           [list_aggregate(list_transform(toks, t -> md5('s0:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s1:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s2:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s3:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s4:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s5:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s6:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s7:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s8:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s9:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s10:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s11:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s12:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s13:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s14:' || t)), 'min'),
-           list_aggregate(list_transform(toks, t -> md5('s15:' || t)), 'min')] AS sig
-        FROM toks
+           [{minhashes}] AS sig
+        FROM doc_toks
     ),
-    bands AS (
-        SELECT doc_id,
-               unnest([0, 1, 2, 3]) AS band,
-               unnest([md5(sig[1]||sig[2]||sig[3]||sig[4]),
-                   md5(sig[5]||sig[6]||sig[7]||sig[8]),
-                   md5(sig[9]||sig[10]||sig[11]||sig[12]),
-                   md5(sig[13]||sig[14]||sig[15]||sig[16])]) AS band_hash
-        FROM sig
-    ),
+    bands AS ({" UNION ALL ".join(per_geometry)}),
     cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a
-        JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash
-                    AND a.doc_id < b.doc_id
-    )
+        JOIN bands b ON a.bands = b.bands AND a.band = b.band
+                    AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
+    )"""
+
+
+@register("dedup_minhash_lsh")  # rows-only: xxhash64 has no DuckDB twin
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash + LSH near-dup: token set → 16 minhashes (xxhash64 with seed
+    prefixes) → 4 bands → band-equality join → exact-Jaccard verification of
+    candidates. The band join is the scale path: candidates ∝ colliding
+    bands, not n². Verified output = (doc_a, doc_b, est_jaccard, jaccard).
+    Driver does a rows-only check; the exact re-verification inside the
+    query is the correctness guard.
+
+    Bench note: the fixture corpus is drawn from a 31-word vocabulary, so
+    documents are adversarially self-similar — at sf0.1 the 5 000 docs
+    yield ~4.2 M pairs that genuinely pass banding AND the est-Jaccard
+    prune AND exact verification — output-volume bound, not candidate
+    explosion: on a real-corpus similarity distribution the same plan
+    emits orders of magnitude fewer pairs per doc."""
+    return _verify_candidates(*_minhash_funnel(spark, sf_dir, "xxhash64"))
+
+
+@register(
+    "dedup_minhash_lsh_md5",
+    oracle=f"""
+    WITH {_md5_funnel_ctes()}
     SELECT doc_a, doc_b, est_jaccard, jaccard FROM (
         SELECT doc_a, doc_b,
                round(list_sum(list_transform([1,2,3,4,5,6,7,8,9,10,11,12,13,14,15,16], i -> CASE WHEN fa.sig[i] = fb.sig[i] THEN 1 ELSE 0 END)) / 16.0, 4) AS est_jaccard,
@@ -508,37 +371,16 @@ def _md5_minhash_funnel(
     """,
 )
 def dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash + LSH with FULL value parity: identical funnel to
+    """MinHash + LSH with FULL value parity: the same funnel as
     `dedup_minhash_lsh` (16 signatures, 4 bands, candidate → estimate-prune
     → exact-Jaccard verify), but every hash is md5 — bit-identical between
     Spark and DuckDB — and each minhash is the lexicographic MIN of the
     per-token digests (uniform over hex strings, so the same estimator).
-    The xxhash64 twin stays registered as the throughput path (64-bit
+    The xxhash64 family stays registered as the throughput path (64-bit
     integer hashing is ~an order of magnitude cheaper than 32-hex-char md5
-    strings); this variant exists so the sketch pipeline itself has a hard
-    driver-checked oracle rather than a rows-only pass. The signature and
-    candidate frames come from the session-shared `_md5_minhash_funnel`
-    (also consumed by `dedup_minhash_recall_eval`)."""
-    sig, cand = _md5_minhash_funnel(spark, sf_dir)
-    fa = sig.select(
-        F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"), F.col("toks").alias("ta")
-    )
-    fb = sig.select(
-        F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"), F.col("toks").alias("tb")
-    )
-    est = _sig_agreement("sa", "sb") / float(_N_MINHASH)
-    inter = F.size(F.array_intersect("ta", "tb"))
-    jac = inter / (F.size("ta") + F.size("tb") - inter)
-    # same size-gated pin rationale as dedup_minhash_lsh (the xxhash64 twin)
-    return (
-        cand.join(size_gated_broadcast(fa), "doc_a")
-        .join(size_gated_broadcast(fb), "doc_b")
-        .withColumn("est_jaccard", F.round(est, 4))
-        .filter(F.col("est_jaccard") >= 0.5)
-        .withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= 0.7)
-        .select("doc_a", "doc_b", "est_jaccard", "jaccard")
-    )
+    strings); this variant gives the sketch pipeline itself a hard
+    driver-checked oracle rather than a rows-only pass."""
+    return _verify_candidates(*_minhash_funnel(spark, sf_dir, "md5"))
 
 
 @register("dedup_simhash")  # rows-only: xxhash64-based bit sums
@@ -1236,32 +1078,7 @@ def dedup_containment_3gram(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN sizes sb ON doc_b = sb.doc_id
         WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.95
     ),
-    tl AS (
-        SELECT doc_id, list_distinct(string_split_regex(trim(text), '\\s+')) AS tk
-        FROM documents
-    ),
-    sig AS (
-        SELECT doc_id,
-           [{", ".join(
-               "list_aggregate(list_transform(tk, t -> md5('s%d:' || t)), 'min')" % i
-               for i in range(16))}] AS sig
-        FROM tl
-    ),
-    bands AS (
-        SELECT doc_id,
-               unnest([0, 1, 2, 3]) AS band,
-               unnest([md5(sig[1]||sig[2]||sig[3]||sig[4]),
-                   md5(sig[5]||sig[6]||sig[7]||sig[8]),
-                   md5(sig[9]||sig[10]||sig[11]||sig[12]),
-                   md5(sig[13]||sig[14]||sig[15]||sig[16])]) AS band_hash
-        FROM sig
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a
-        JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash
-                    AND a.doc_id < b.doc_id
-    ),
+    {_md5_funnel_ctes()},
     m AS (
         SELECT (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
                (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_candidates,
@@ -1289,13 +1106,13 @@ def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: truth reuses the size-probe equi-join of
     `dedup_ngram_jaccard` (never all pairs); candidates come from the
-    session-shared `_md5_minhash_funnel` (the same frame
+    session-shared md5 `_minhash_funnel` (the same frame
     `dedup_minhash_lsh_md5` verifies over) and stop at the DISTINCT
     pair set — no signature fetch, no verify join, since only membership
     is scored. Three count aggregates meet in a 1-row frame; ratios are
     one division each under round(4)."""
     truth = _jaccard_truth_pairs(spark, sf_dir)
-    _sig, cand = _md5_minhash_funnel(spark, sf_dir)
+    _sig, cand = _minhash_funnel(spark, sf_dir, "md5")
     n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
     n_cand = cand.agg(F.count(F.lit(1)).cast("bigint").alias("n_candidates"))
     n_hits = (
@@ -1727,21 +1544,6 @@ def _lsh_capture(j: float, r: int, b: int) -> float:
 
 
 def _lsh_sweep_oracle() -> str:
-    sig_lines = ",\n           ".join(
-        f"list_aggregate(list_transform(toks, t -> md5('s{i}:' || t)), 'min')"
-        for i in range(_N_MINHASH)
-    )
-    band_ctes = []
-    for b, r in _LSH_SWEEP_CONFIGS:
-        idx = ", ".join(str(k) for k in range(b))
-        hashes = ", ".join(
-            "md5(" + "||".join(f"sig[{k * r + i + 1}]" for i in range(r)) + ")"
-            for k in range(b)
-        )
-        band_ctes.append(
-            f"SELECT doc_id, {b} AS bands, {r} AS rpb,"
-            f" unnest([{idx}]) AS band_idx, unnest([{hashes}]) AS bh FROM sig"
-        )
     cap70 = " ".join(
         f"WHEN {b} THEN CAST({_lsh_capture(0.7, r, b)} AS DOUBLE)"
         for b, r in _LSH_SWEEP_CONFIGS
@@ -1751,18 +1553,9 @@ def _lsh_sweep_oracle() -> str:
         for b, r in _LSH_SWEEP_CONFIGS
     )
     return f"""
-    WITH toks AS (
-        SELECT doc_id, list_distinct(string_split_regex(trim(text), '\\s+')) AS toks
-        FROM documents
-    ),
-    sig AS (
-        SELECT doc_id,
-           [{sig_lines}] AS sig
-        FROM toks
-    ),
-    bands AS ({" UNION ALL ".join(band_ctes)}),
+    WITH {_md5_funnel_ctes(_LSH_SWEEP_CONFIGS)},
     buckets AS (
-        SELECT bands, rpb, band_idx, bh, CAST(count(*) AS BIGINT) AS df
+        SELECT bands, rpb, band, band_hash, CAST(count(*) AS BIGINT) AS df
         FROM bands GROUP BY 1, 2, 3, 4
     )
     SELECT CAST(bands AS INTEGER) AS bands,
@@ -1781,7 +1574,7 @@ def _lsh_sweep_oracle() -> str:
 def dedup_lsh_band_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding-geometry sweep — the parameter-choice tool for the
     MinHash funnel: regroups the SAME 16 md5 minhash signatures
-    (session-shared `_md5_minhash_funnel` frame) into 2×8 / 4×4 / 8×2
+    (session-shared md5 `_minhash_funnel` frame) into 2×8 / 4×4 / 8×2
     (bands × rows) and reports, per geometry, the two sides of the LSH
     tradeoff: the theoretical S-curve capture probability
     1−(1−j^r)^b at j=0.7 and j=0.95 (computed driver-side and emitted as
@@ -1803,30 +1596,16 @@ def dedup_lsh_band_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df can reach corpus scale on a degenerate band, squaring past
     bigint); pair_volume is emitted as bigint for the fixture — a 100 TB
     deployment emits the decimal or a log-bucketed variant."""
-    sig, _cand = _md5_minhash_funnel(spark, sf_dir)
-    per_cfg = []
-    for b, r in _LSH_SWEEP_CONFIGS:
-        bands = sig.select(
+    sig, _cand = _minhash_funnel(spark, sf_dir, "md5")
+    per_cfg = [
+        sig.select(
             "doc_id",
             F.lit(b).alias("bands"),
             F.lit(r).alias("rpb"),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.md5(
-                            F.concat(
-                                *[
-                                    F.element_at("sig", k * r + i + 1)
-                                    for i in range(r)
-                                ]
-                            )
-                        )
-                        for k in range(b)
-                    ]
-                )
-            ).alias("band_idx", "bh"),
+            F.posexplode(F.array(*_band_hashes("md5", b, r))).alias("band_idx", "bh"),
         )
-        per_cfg.append(bands)
+        for b, r in _LSH_SWEEP_CONFIGS
+    ]
     all_bands = per_cfg[0]
     for extra in per_cfg[1:]:
         all_bands = all_bands.unionByName(extra)
@@ -2297,12 +2076,14 @@ declare_helper_deps("dedup_semdedup_prune", _cell_assignment, session_memo)
 # the line-pack envelope guard builds the first-occurrence key itself —
 # computation-bearing, so declared (r14 review finding)
 declare_helper_deps("dedup_line_level", _guarded_line_pack)
-declare_helper_deps("dedup_minhash_lsh", _xxhash_minhash_funnel)
-declare_helper_deps("dedup_minhash_lsh_md5", _md5_minhash_funnel)
+for _lsh_consumer in ("dedup_minhash_lsh", "dedup_minhash_lsh_md5"):
+    declare_helper_deps(
+        _lsh_consumer, _minhash_funnel, _band_hashes, _verify_candidates
+    )
 declare_helper_deps(
-    "dedup_minhash_recall_eval", _md5_minhash_funnel, _jaccard_truth_pairs
+    "dedup_minhash_recall_eval", _minhash_funnel, _band_hashes, _jaccard_truth_pairs
 )
-declare_helper_deps("dedup_lsh_band_profile", _md5_minhash_funnel)
+declare_helper_deps("dedup_lsh_band_profile", _minhash_funnel, _band_hashes)
 # the label engine CALLS _jaccard_truth_pairs, so its consumers must
 # declare BOTH (r13 census audit): declarations are not transitive — a
 # truth-pair edit previously destabilized only dedup_minhash_recall_eval

@@ -25,7 +25,7 @@ ORACLE: dict[str, str] = {}
 # Shared-helper dependency declarations (query name -> helper callables).
 # stable_tier.py folds each declared helper's SOURCE into the query's
 # change detection: a registered function's own source + oracle miss
-# edits to session-memo engines (_cell_assignment, _md5_minhash_funnel,
+# edits to session-memo engines (_cell_assignment, _minhash_funnel,
 # _knn_graph, ...) that several queries delegate their math to — the
 # r12 review's gate-blind-spot finding.  Declarations live at module
 # level AFTER the function definitions, NOT in the @register decorator

@@ -117,6 +117,11 @@ def test_committed_baseline_no_git_falls_back_to_file(tmp_path):
     assert _committed_baseline(str(tmp_path / "missing"), 0.1, 4) == ({}, "none")
 
 
+# membw probes every call passes: the committed records below without
+# membw2_* probes leave that leg at no-reference, so it never gates them
+_MEMBW = {"membw_start": 0.080, "membw_end": 0.081}
+
+
 def test_calibration_verdict_labels_degraded_runs():
     """VERDICT r12 task 4: the ambient probe must GATE the record's health
     label — worst current probe vs best committed probe, >1.25x ⇒
@@ -125,34 +130,34 @@ def test_calibration_verdict_labels_degraded_runs():
 
     committed = {"ambient_calibration_sec": {"start": 0.160, "end": 0.165}}
     # the live r12 case: driver probe 0.212 vs builder 0.160 → 1.325x
-    v = _calibration_verdict(0.212, 0.205, committed)
+    v = _calibration_verdict(0.212, 0.205, committed, **_MEMBW)
     assert v["status"] == "degraded"
     assert v["current_worst"] == 0.212  # the WORSE of start/end
     assert v["committed_best"] == 0.160  # the BETTER committed probe
     assert v["ratio"] == 1.325
     # healthy: within 25% of the committed best
-    assert _calibration_verdict(0.150, 0.170, committed)["status"] == "healthy"
+    assert _calibration_verdict(0.150, 0.170, committed, **_MEMBW)["status"] == "healthy"
     # boundary: exactly 1.25x is NOT degraded (strict >)
-    assert _calibration_verdict(0.16, 0.20, committed)["status"] == "healthy"
+    assert _calibration_verdict(0.16, 0.20, committed, **_MEMBW)["status"] == "healthy"
     # a run that degraded mid-flight is degraded (end probe is the max)
-    assert _calibration_verdict(0.150, 0.212, committed)["status"] == "degraded"
+    assert _calibration_verdict(0.150, 0.212, committed, **_MEMBW)["status"] == "degraded"
 
 
 def test_calibration_verdict_without_reference_is_explicit():
     """No committed probe ⇒ 'no-reference', never silently healthy."""
     from bench import _calibration_verdict
 
-    assert _calibration_verdict(0.2, 0.2, None)["status"] == "no-reference"
-    assert _calibration_verdict(0.2, 0.2, {})["status"] == "no-reference"
+    assert _calibration_verdict(0.2, 0.2, None, **_MEMBW)["status"] == "no-reference"
+    assert _calibration_verdict(0.2, 0.2, {}, **_MEMBW)["status"] == "no-reference"
     # committed provenance exists but predates the probe (r1-r11 records)
     assert (
-        _calibration_verdict(0.2, 0.2, {"run_label": "x"})["status"]
+        _calibration_verdict(0.2, 0.2, {"run_label": "x"}, **_MEMBW)["status"]
         == "no-reference"
     )
     # a malformed probe block (nulls) is also no-reference
     assert (
         _calibration_verdict(
-            0.2, 0.2, {"ambient_calibration_sec": {"start": None}}
+            0.2, 0.2, {"ambient_calibration_sec": {"start": None}}, **_MEMBW
         )["status"]
         == "no-reference"
     )
@@ -161,7 +166,7 @@ def test_calibration_verdict_without_reference_is_explicit():
 def test_calibration_reference_survives_degraded_commits():
     """One committed degraded record must not ratchet the reference slow:
     the verdict's reference is the min over the last record's probes AND
-    the committed_best that record was judged against."""
+    the probe history that record was judged against."""
     from bench import _calibration_verdict
 
     # a degraded record got committed (by design); its probes read 0.17
@@ -172,16 +177,17 @@ def test_calibration_reference_survives_degraded_commits():
             "status": "degraded",
             "committed_best": 0.13,
             "ratio": 1.3077,
+            "probe_history": [0.13],
         },
     }
     # an equally-slow next run must STILL read degraded (0.17/0.13 > 1.25),
     # not launder itself healthy against the slow record's own probes
-    v = _calibration_verdict(0.17, 0.17, degraded_committed)
+    v = _calibration_verdict(0.17, 0.17, degraded_committed, **_MEMBW)
     assert v["status"] == "degraded"
     assert v["committed_best"] == 0.13
     # and a genuinely recovered run reads healthy against the same history
     assert (
-        _calibration_verdict(0.14, 0.14, degraded_committed)["status"]
+        _calibration_verdict(0.14, 0.14, degraded_committed, **_MEMBW)["status"]
         == "healthy"
     )
 
@@ -215,10 +221,6 @@ def test_membw_probe_gates_the_record():
     )
     assert h["status"] == "healthy"
     assert h["membw"]["status"] == "healthy"
-    # a pre-upgrade replay with no membw probe keeps the one-leg verdict
-    one = _calibration_verdict(0.131, 0.130, committed)
-    assert one["status"] == "healthy"
-    assert "membw" not in one
     # prior record lacks membw probes (r13 and earlier) -> membw leg is
     # explicitly no-reference, never silently healthy, and does not
     # block an otherwise-healthy record
@@ -248,7 +250,7 @@ def test_calibration_reference_carry_is_bounded():
     }
     # while the outlier is in the window, a normal 0.130 run reads
     # degraded (0.130/0.090 = 1.44x) — same as the old behavior
-    v = _calibration_verdict(0.130, 0.130, committed)
+    v = _calibration_verdict(0.130, 0.130, committed, **_MEMBW)
     assert v["status"] == "degraded"
     assert v["committed_best"] == 0.090
     # the new history drops the outlier (oldest entry) and appends this
@@ -262,14 +264,7 @@ def test_calibration_reference_carry_is_bounded():
         "ambient_calibration_sec": {"start": 0.130, "end": 0.130},
         "ambient_verdict": v,
     }
-    assert _calibration_verdict(0.131, 0.130, nxt)["status"] == "healthy"
-    # legacy committed_best is ONLY consulted when no history exists
-    # (the one-round transition from pre-r14 records)
-    legacy = {
-        "ambient_calibration_sec": {"start": 0.130, "end": 0.131},
-        "ambient_verdict": {"committed_best": 0.090},
-    }
-    assert _calibration_verdict(0.130, 0.130, legacy)["status"] == "degraded"
+    assert _calibration_verdict(0.131, 0.130, nxt, **_MEMBW)["status"] == "healthy"
 
 
 def test_degraded_commit_still_cannot_launder_with_history():
@@ -286,107 +281,14 @@ def test_degraded_commit_still_cannot_launder_with_history():
             "probe_history": [0.130, 0.129, 0.131, 0.130, 0.170],
         },
     }
-    v = _calibration_verdict(0.170, 0.170, degraded_committed)
+    v = _calibration_verdict(0.170, 0.170, degraded_committed, **_MEMBW)
     assert v["status"] == "degraded"
     assert v["committed_best"] == 0.129
     # and a genuinely recovered run reads healthy
     assert (
-        _calibration_verdict(0.135, 0.133, degraded_committed)["status"]
+        _calibration_verdict(0.135, 0.133, degraded_committed, **_MEMBW)["status"]
         == "healthy"
     )
-
-
-def test_membw_history_survives_a_probe_less_record():
-    """r14 review finding: a committed record from a run WITHOUT membw
-    probes (pre-upgrade replay) must carry the prior membw history
-    forward — labeled, non-gating — so the next probed run still has its
-    reference instead of silently resetting to no-reference."""
-    from bench import _calibration_verdict
-
-    probed = {
-        "ambient_calibration_sec": {
-            "start": 0.130,
-            "end": 0.131,
-            "membw2_start": 0.105,
-            "membw2_end": 0.106,
-        },
-        "ambient_verdict": {
-            "probe_history": [0.130],
-            "membw": {"membw2_probe_history": [0.105]},
-        },
-    }
-    # a replay without membw probes, judged against the probed record
-    carried = _calibration_verdict(0.131, 0.130, probed)
-    assert carried["membw"]["status"] == "carried-no-probe"
-    assert carried["membw"]["membw2_probe_history"] == [0.105]
-    # commit that record; the NEXT probed run still sees the reference
-    committed_replay = {
-        "ambient_calibration_sec": {"start": 0.131, "end": 0.130},
-        "ambient_verdict": carried,
-    }
-    nxt = _calibration_verdict(
-        0.130, 0.130, committed_replay, membw_start=0.160, membw_end=0.158
-    )
-    assert nxt["membw"]["status"] == "degraded"  # 0.160/0.105 > 1.25
-    assert nxt["membw"]["committed_best"] == 0.105
-    assert nxt["status"] == "degraded"
-    # and with NO prior membw anywhere, a probe-less run stays one-leg
-    bare = {"ambient_calibration_sec": {"start": 0.130, "end": 0.131}}
-    assert "membw" not in _calibration_verdict(0.131, 0.130, bare)
-
-
-def test_membw_carry_expires_after_history_window():
-    """ADVICE r14 #2: the carried-no-probe path used to copy the prior
-    membw history verbatim forever, so consecutive probe-less commits
-    froze a stale fast probe from an old host epoch indefinitely —
-    the unbounded-ratchet problem in a new coat. The carry now counts
-    how many records it has survived and expires to no-reference after
-    _CALIB_HISTORY_N probe-less records."""
-    from bench import _CALIB_HISTORY_N, _calibration_verdict
-
-    record = {
-        "ambient_calibration_sec": {
-            "start": 0.130,
-            "end": 0.131,
-            "membw2_start": 0.105,
-            "membw2_end": 0.106,
-        },
-        "ambient_verdict": {
-            "probe_history": [0.130],
-            "membw": {"membw2_probe_history": [0.105]},
-        },
-    }
-    for i in range(_CALIB_HISTORY_N):
-        v = _calibration_verdict(0.131, 0.130, record)
-        assert v["membw"]["status"] == "carried-no-probe"
-        assert v["membw"]["carried_records"] == i + 1
-        record = {
-            "ambient_calibration_sec": {"start": 0.131, "end": 0.130},
-            "ambient_verdict": v,
-        }
-    # the (N+1)-th consecutive probe-less record drops the stale carry
-    expired = _calibration_verdict(0.131, 0.130, record)
-    assert "membw" not in expired
-    # a PROBED run resets the counter: its verdict carries no
-    # carried_records key, so the next probe-less chain starts at 1
-    probed = _calibration_verdict(
-        0.130, 0.130, record, membw_start=0.104, membw_end=0.106
-    )
-    assert "carried_records" not in probed["membw"]
-    fresh = _calibration_verdict(
-        0.131,
-        0.130,
-        {
-            "ambient_calibration_sec": {
-                "start": 0.130,
-                "end": 0.130,
-                "membw2_start": 0.104,
-                "membw2_end": 0.106,
-            },
-            "ambient_verdict": probed,
-        },
-    )
-    assert fresh["membw"]["carried_records"] == 1
 
 
 def test_compact_line_keeps_headline_dedup_family():

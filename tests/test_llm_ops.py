@@ -42,6 +42,23 @@ def test_minhash_estimates_track_exact_jaccard(spark):
         assert abs(r.est_jaccard - r.jaccard) <= 0.35, (r.doc_a, r.doc_b, r.est_jaccard, r.jaccard)
 
 
+def test_minhash_funnel_memo_keeps_families_apart(spark):
+    """Both hash families share one funnel memo. Each family must get its
+    own (sig, cand): md5 minhashes are hex strings, xxhash64 ones are
+    longs, the band collisions differ, and a second call per family
+    returns the memoized frames themselves."""
+    from spark_ibm_mq_spark.operators.dedup import _minhash_funnel
+
+    md5 = _minhash_funnel(spark, SF_DIR, "md5")
+    xx = _minhash_funnel(spark, SF_DIR, "xxhash64")
+    assert md5[0].schema["sig"].dataType.elementType.simpleString() == "string"
+    assert xx[0].schema["sig"].dataType.elementType.simpleString() == "bigint"
+    assert set(md5[1].collect()) != set(xx[1].collect())
+    for family, frames in (("md5", md5), ("xxhash64", xx)):
+        again = _minhash_funnel(spark, SF_DIR, family)
+        assert again[0] is frames[0] and again[1] is frames[1], family
+
+
 def test_simhash_pairs_are_near_dups(spark):
     """Hamming ≤ 6 of 48 bits implies similar token sets: simhash pairs
     must skew strongly toward high exact Jaccard (measured ≈0.86 mean /
