@@ -12,70 +12,33 @@ land as staging reads that immediately re-materialize to parquet.
 
 from __future__ import annotations
 
-import atexit
-import hashlib
 import os
-import shutil
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from spark_ibm_mq_spark.registry import register
-from spark_ibm_mq_spark.tables import load_table
-
-_SCRATCH: list[str] = []
-
-
-def _track_scratch(d: str) -> str:
-    if not _SCRATCH:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH]
-        )
-    _SCRATCH.append(d)
-    return d
-
-
-def _tag(sf_dir: str, tables: tuple[str, ...]) -> str:
-    """Cache key for a derived export: fixture path PLUS a content
-    fingerprint (size + mtime) of every source parquet involved — the
-    scale_layout._tag convention (ADVICE r5/r8): a path-only marker would
-    silently serve a stale derived copy if the fixture at the same path is
-    regenerated, while the oracle reads the fresh parquet."""
-    parts = [sf_dir]
-    for t in tables:
-        src = os.path.join(sf_dir, f"{t}.parquet")
-        try:
-            st = os.stat(src)
-            parts.append(f"{t}|{st.st_size}|{st.st_mtime_ns}")
-        except OSError:
-            parts.append(t)
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
+from spark_ibm_mq_spark.tables import fixture_cache, load_table
 
 
 def _export_dir(sf_dir: str) -> str:
-    tag = _tag(sf_dir, ("nation", "orders"))
-    d = os.path.join(tempfile.gettempdir(), f"file_sources_{tag}")
-    marker = os.path.join(d, ".complete")
-    if os.path.exists(marker):
-        return d
-    import duckdb
+    def build(d: str) -> None:
+        import duckdb
 
-    os.makedirs(d, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT n_nationkey, n_name, n_regionkey
-                 FROM read_parquet('{sf_dir}/nation.parquet') ORDER BY n_nationkey)
-            TO '{d}/nation.csv' (HEADER, DELIMITER ',')"""
-    )
-    con.execute(
-        f"""COPY (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-                 FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey)
-            TO '{d}/orders.jsonl' (FORMAT JSON)"""
-    )
-    con.close()
-    open(marker, "w").close()
-    return _track_scratch(d)
+        con = duckdb.connect()
+        con.execute(
+            f"""COPY (SELECT n_nationkey, n_name, n_regionkey
+                     FROM read_parquet('{sf_dir}/nation.parquet') ORDER BY n_nationkey)
+                TO '{d}/nation.csv' (HEADER, DELIMITER ',')"""
+        )
+        con.execute(
+            f"""COPY (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
+                     FROM read_parquet('{sf_dir}/orders.parquet') ORDER BY o_orderkey)
+                TO '{d}/orders.jsonl' (FORMAT JSON)"""
+        )
+        con.close()
+
+    return fixture_cache(sf_dir, ("nation", "orders"), "file_sources", build)
 
 
 @register(
@@ -149,18 +112,11 @@ def scan_orc_roundtrip_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the choice between them is ecosystem (Hive/Trino affinity),
     not capability — this query exists so a user migrating an ORC lake
     has a tested path."""
-    tag = _tag(sf_dir, ("region", "nation"))
-    d = os.path.join(tempfile.gettempdir(), f"orc_export_{tag}")
-    marker = os.path.join(d, ".complete")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "region").write.mode("overwrite").orc(
-            os.path.join(d, "region")
-        )
-        load_table(spark, sf_dir, "nation").write.mode("overwrite").orc(
-            os.path.join(d, "nation")
-        )
-        open(marker, "w").close()
-        _track_scratch(d)
+    def build(d: str) -> None:
+        for t in ("region", "nation"):
+            load_table(spark, sf_dir, t).write.orc(os.path.join(d, t))
+
+    d = fixture_cache(sf_dir, ("region", "nation"), "orc_export", build)
     r = spark.read.orc(os.path.join(d, "region"))
     n = spark.read.orc(os.path.join(d, "nation"))
     return (

@@ -9,39 +9,18 @@ reproduce — full value parity for the custom source, not just rows-only.
 
 from __future__ import annotations
 
-import atexit
-import hashlib
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from spark_ibm_mq_spark.operators.projections import EVENTS_CTE
-from spark_ibm_mq_spark.registry import register
-from spark_ibm_mq_spark.session import scratch_base
+from spark_ibm_mq_spark.registry import declare_helper_deps, register
+from spark_ibm_mq_spark.session import scratch_dir
 from spark_ibm_mq_spark.sources import MQ_SCHEMA, FakeMQBroker, register_ibmmq
+from spark_ibm_mq_spark.tables import fixture_cache
 
 _QUEUE = "EVENTS.Q"
-
-_SCRATCH: list[str] = []
-
-
-def _scratch(prefix: str) -> str:
-    """Per-call scratch dir, removed at interpreter exit. Results are read
-    lazily from these dirs after the query returns, so cleanup must outlive
-    the call — atexit, not try/finally (repeated bench/correctness runs were
-    leaking one broker copy + sink per invocation, ADVICE r4)."""
-    return _track_dir(tempfile.mkdtemp(prefix=prefix, dir=scratch_base()))
-
-
-def _track_dir(d: str) -> str:
-    if not _SCRATCH:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH]
-        )
-    _SCRATCH.append(d)
-    return d
 
 _DRAIN_ORACLE = f"""
     {EVENTS_CTE}
@@ -54,44 +33,81 @@ _DRAIN_ORACLE = f"""
 """
 
 
+def _events_broker(sf_dir: str, name: str, queues: dict[str, str]) -> str:
+    """A fake-broker directory mirroring `events`, built once per fixture
+    version: each queue holds the rows its SQL predicate selects, in
+    (ts, event_id) order. DuckDB does the export, so the fixture needs no
+    Spark job and its line order is deterministic; `FakeMQBroker.put_all`
+    writes the queue files."""
+
+    def build(d: str) -> None:
+        import duckdb
+
+        con = duckdb.connect()
+        for queue, where in queues.items():
+            FakeMQBroker(d, queue).put_all(
+                con.execute(
+                    f"""SELECT epoch_ms(CAST(ts AS TIMESTAMP)), event_id, props
+                        FROM read_parquet('{sf_dir}/events.parquet')
+                        WHERE {where}
+                        ORDER BY ts, event_id"""
+                ).fetchall()
+            )
+        con.close()
+
+    return fixture_cache(sf_dir, ("events",), name, build)
+
+
 def _broker_dir_for(sf_dir: str) -> str:
-    """Materialize (once per fixture version) a fake-broker queue mirroring
-    `events`.
+    """The one-queue broker fixture: every event on `_QUEUE`."""
+    return _events_broker(sf_dir, "ibmmq_fake_broker", {_QUEUE: "true"})
 
-    DuckDB does the export — no Spark job needed to build the fixture, and
-    the line order (ts, event_id) is deterministic.  The cache key is the
-    file_sources._tag convention (ADVICE r9): sf_dir PLUS size+mtime_ns of
-    events.parquet, so a regenerated fixture at the same path rebuilds the
-    queue instead of silently serving stale messages while the oracle reads
-    the fresh parquet.  Freshly-built dirs are atexit-tracked like every
-    other derived export (_track_scratch in file_sources.py)."""
-    from spark_ibm_mq_spark.operators.file_sources import _tag
 
-    tag = _tag(sf_dir, ("events",))
-    d = os.path.join(tempfile.gettempdir(), f"ibmmq_fake_broker_{tag}")
-    marker = os.path.join(d, ".complete")
-    if os.path.exists(marker):
-        return d
-    import duckdb
+_FLUSH_SENTINEL = "__flush__"
 
-    os.makedirs(d, exist_ok=True)
-    qfile = os.path.join(d, f"{_QUEUE}.jsonl")
-    con = duckdb.connect()
-    rows = con.execute(
-        f"""SELECT epoch_ms(CAST(ts AS TIMESTAMP)), event_id, props
-            FROM read_parquet('{sf_dir}/events.parquet')
-            ORDER BY ts, event_id"""
-    ).fetchall()
-    con.close()
-    tmp = qfile + ".tmp"
-    import json
 
-    with open(tmp, "w", encoding="utf-8") as f:
-        for put_ms, seq_no, body in rows:
-            f.write(json.dumps({"put_ms": int(put_ms), "seq_no": int(seq_no), "body": body}) + "\n")
-    os.replace(tmp, qfile)
-    open(marker, "w").close()
-    return _track_dir(d)
+def _drain(reader, work: str, total: int, label: str, flush: FakeMQBroker | None = None) -> str:
+    """Run ``reader`` into a parquet sink under ``work`` until the source
+    has handed ``total`` rows to committed micro-batches; returns the sink
+    path.
+
+    availableNow processes the one prefetched batch per run, so the loop
+    restarts from the checkpoint until the cursor has covered the queue.
+    The covered-the-queue check reads the query's own progress counters
+    instead of re-counting the sink, which would re-read everything
+    drained so far once per run. A loop that runs out of restarts, or rows
+    counted twice, fails loudly rather than returning a short or padded
+    sink.
+
+    ``flush``: a destructive read acks a batch only when the next batch is
+    constructed, so a drained availableNow run leaves its last batch
+    read-but-unacked. On a live queue the next arrival closes that window;
+    here one `_FLUSH_SENTINEL` is put on ``flush`` and one more run is
+    made, whose batch construction fires the final commit."""
+    out = os.path.join(work, "out")
+
+    def run() -> int:
+        q = (
+            reader.load()
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return sum(int(p["numInputRows"]) for p in q.recentProgress)
+
+    drained_rows = 0
+    for _ in range(8):
+        drained_rows += run()
+        if drained_rows >= total:
+            break
+    assert drained_rows == total, f"{label} read {drained_rows} of {total} rows"
+    if flush is not None:
+        flush.put(9_999_999_999_999, 0, _FLUSH_SENTINEL)
+        run()
+    return out
 
 
 @register("mq_source_batch_drain", oracle=_DRAIN_ORACLE)
@@ -120,8 +136,6 @@ def mq_source_stream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     IBMMQReceiver.java:131-134); checkpoint/sink dirs are fresh per call."""
     d = _broker_dir_for(sf_dir)
     register_ibmmq(spark)
-    work = _scratch("ibmmq_stream_drain_")
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
     total = FakeMQBroker(d, _QUEUE).depth()
     reader = (
         spark.readStream.format("ibmmq")
@@ -131,30 +145,8 @@ def mq_source_stream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("keepMessages", "true")
         .option("maxMessagesPerBatch", str(max(total, 1)))
     )
-    # availableNow processes the one prefetched batch per run; loop restarts
-    # from the checkpoint until the cursor has covered the queue. The
-    # covered-the-queue check reads the query's own progress counters
-    # (rows the source handed to committed micro-batches) instead of
-    # re-counting the parquet sink, which would re-read everything drained
-    # so far once per iteration.
-    drained_rows = 0
-    for _ in range(8):
-        q = (
-            reader.load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        drained_rows += sum(int(p["numInputRows"]) for p in q.recentProgress)
-        if drained_rows >= total:
-            break
-    # a loop that ran out of restarts, or rows counted twice, fails loudly
-    # rather than returning a short or padded sink
-    assert drained_rows == total, f"stream drain read {drained_rows} of {total} rows"
-    return spark.read.parquet(out)
+    work = scratch_dir("ibmmq_stream_drain_")
+    return spark.read.parquet(_drain(reader, work, total, "stream drain"))
 
 
 @register("mq_source_destructive_drain", oracle=_DRAIN_ORACLE)
@@ -166,23 +158,17 @@ def mq_source_destructive_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Runs against a per-call COPY of the broker fixture (destructive reads
     mutate the queue; the shared browse fixture must stay intact) and drains
-    with keepMessages=false. Spark only calls `commit(end_N)` when batch N+1
-    is CONSTRUCTED — an empty prefetch plans no batch, so a fully-drained
-    availableNow run leaves the final batch read-but-unacked (exactly the
-    at-least-once redelivery window the contract allows). On a live queue
-    the next arrival closes that window; the fixture models it by putting
-    one flush sentinel after the drain and running one more cycle, whose
-    batch construction fires the final commit. Asserts every real message
-    ends consumed (acked == puts, only the sentinel left) — the driver row
-    therefore witnesses both the row values AND the destructive semantics."""
+    with keepMessages=false, closing the last batch's at-least-once
+    redelivery window with `_drain`'s flush sentinel. Asserts every real
+    message ends consumed (acked == puts, only the sentinel left) — the
+    driver row therefore witnesses both the row values AND the destructive
+    semantics."""
     src = _broker_dir_for(sf_dir)
-    d = _scratch("ibmmq_destructive_")
-    shutil.copy(os.path.join(src, f"{_QUEUE}.jsonl"), os.path.join(d, f"{_QUEUE}.jsonl"))
+    d = scratch_dir("ibmmq_destructive_")
+    shutil.copytree(src, d, dirs_exist_ok=True)
     register_ibmmq(spark)
     broker = FakeMQBroker(d, _QUEUE)
     total = broker.depth()
-    work = _scratch("ibmmq_destructive_work_")
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
     reader = (
         spark.readStream.format("ibmmq")
         .schema(MQ_SCHEMA)
@@ -191,36 +177,15 @@ def mq_source_destructive_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("keepMessages", "false")
         .option("maxMessagesPerBatch", str(max(total, 1)))
     )
-    sentinel = "__flush__"
-    drained = False
-    drained_rows = 0
-    for _ in range(10):
-        q = (
-            reader.load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        if drained:  # extra cycle: sentinel batch construction acks the rest
-            break
-        # covered-the-queue via the query's own progress counters, as in
-        # mq_source_stream_drain; the asserts below also check the broker's
-        # acked/depth state, which witnesses the destructive semantics
-        drained_rows += sum(int(p["numInputRows"]) for p in q.recentProgress)
-        if drained_rows >= total:
-            drained = True
-            broker.put(9_999_999_999_999, 0, sentinel)
-    assert drained_rows == total, f"destructive drain read {drained_rows} of {total} rows"
+    work = scratch_dir("ibmmq_destructive_work_")
+    out = _drain(reader, work, total, "destructive drain", flush=broker)
     assert broker.acked() == total and broker.depth() == 1, (
         f"destructive drain left acked={broker.acked()} depth={broker.depth()} "
         f"of {total} (+1 sentinel)"
     )
     from pyspark.sql import functions as F
 
-    return spark.read.parquet(out).filter(F.col("value") != sentinel)
+    return spark.read.parquet(out).filter(F.col("value") != _FLUSH_SENTINEL)
 
 
 _MULTI_QUEUES = ("EVENTS.EVEN", "EVENTS.ODD")
@@ -229,41 +194,12 @@ _MULTI_QUEUES = ("EVENTS.EVEN", "EVENTS.ODD")
 def _broker_dir_multi(sf_dir: str) -> str:
     """Two-queue broker fixture: events split by user_id parity, each queue
     in its own (ts, event_id)-ordered stream — the reference's
-    one-receiver-per-queue topology (IBMMQReceiver.java:425).  Same
-    size+mtime fingerprint key as _broker_dir_for (ADVICE r9)."""
-    from spark_ibm_mq_spark.operators.file_sources import _tag
-
-    tag = hashlib.md5((_tag(sf_dir, ("events",)) + ":multi").encode()).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), f"ibmmq_fake_broker_{tag}")
-    marker = os.path.join(d, ".complete")
-    if os.path.exists(marker):
-        return d
-    import json
-
-    import duckdb
-
-    os.makedirs(d, exist_ok=True)
-    con = duckdb.connect()
-    for qname, parity in ((_MULTI_QUEUES[0], 0), (_MULTI_QUEUES[1], 1)):
-        rows = con.execute(
-            f"""SELECT epoch_ms(CAST(ts AS TIMESTAMP)), event_id, props
-                FROM read_parquet('{sf_dir}/events.parquet')
-                WHERE user_id % 2 = {parity}
-                ORDER BY ts, event_id"""
-        ).fetchall()
-        tmp = os.path.join(d, f"{qname}.jsonl.tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            for put_ms, seq_no, body in rows:
-                f.write(
-                    json.dumps(
-                        {"put_ms": int(put_ms), "seq_no": int(seq_no), "body": body}
-                    )
-                    + "\n"
-                )
-        os.replace(tmp, os.path.join(d, f"{qname}.jsonl"))
-    con.close()
-    open(marker, "w").close()
-    return _track_dir(d)
+    one-receiver-per-queue topology (IBMMQReceiver.java:425)."""
+    return _events_broker(
+        sf_dir,
+        "ibmmq_fake_broker_multi",
+        {queue: f"user_id % 2 = {parity}" for parity, queue in enumerate(_MULTI_QUEUES)},
+    )
 
 
 @register(
@@ -316,7 +252,7 @@ def mq_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_ibm_mq_spark.streaming.mq_sink import MQWritebackSink
     from spark_ibm_mq_spark.tables import load_table
 
-    d = _scratch("mq_sink_rt_")
+    d = scratch_dir("mq_sink_rt_")
     src = os.path.join(d, "outbound")
     load_table(spark, sf_dir, "events").select(
         F.unix_millis(F.col("ts").cast("timestamp")).alias("put_ms"),
@@ -418,3 +354,9 @@ def dlq_route(spark: SparkSession, broker_dir: str) -> DataFrame:
         F.min("seq_no").alias("min_seq"),
         F.max("seq_no").alias("max_seq"),
     )
+
+
+# each drain's loop and asserts live in _drain, so an edit there must
+# change both queries' stable-tier fingerprints
+for _drain_query in ("mq_source_stream_drain", "mq_source_destructive_drain"):
+    declare_helper_deps(_drain_query, _drain)

@@ -8,17 +8,13 @@ the bucketed self-join with zero exchanges, the partitioned scan with
 partition pruning — and both carry full DuckDB value-parity oracles over
 the *logical* result, which is layout-independent by construction.
 
-Scratch layout lives in tmp and is removed at interpreter exit (same
-contract as the MQ drain queries' broker copies, ADVICE r4).
+The layouts live in `tables.fixture_cache` directories and the bucketed
+table's files in a `session.scratch_dir`, both removed at interpreter exit.
 """
 
 from __future__ import annotations
 
-import atexit
-import hashlib
 import os
-import shutil
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -26,35 +22,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from spark_ibm_mq_spark.operators.dedup import _COS_CELLS, _UNIT_SQL, _dot_sql
 from spark_ibm_mq_spark.operators.projections import EVENTS_CTE
 from spark_ibm_mq_spark.registry import register
-from spark_ibm_mq_spark.tables import load_table
-
-_SCRATCH: list[str] = []
-
-
-def _scratch_dir(prefix: str) -> str:
-    d = tempfile.mkdtemp(prefix=prefix)
-    if not _SCRATCH:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH]
-        )
-    _SCRATCH.append(d)
-    return d
-
-
-def _tag(sf_dir: str, table: str) -> str:
-    """Cache key for a derived layout: fixture path PLUS a content
-    fingerprint (size + mtime) of the source parquet. Path alone is not
-    enough (ADVICE r5): a crashed run leaves the derived copy behind
-    (cleanup is atexit-only), and if the fixture at the same path is later
-    regenerated with different data, a path-keyed marker would silently
-    serve stale results while the oracle reads the fresh fixture."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{sf_dir}|{table}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        stamp = f"{sf_dir}|{table}"
-    return hashlib.md5(stamp.encode()).hexdigest()[:12]
+from spark_ibm_mq_spark.session import scratch_dir
+from spark_ibm_mq_spark.tables import fixture_cache, fixture_fingerprint, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -154,7 +123,7 @@ def _cell_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     logical frame repartitioned by cell — values identical, only the
     zero-exchange physical property is lost (the plan test runs where
     bucketing works)."""
-    tbl = f"emb_cells_bkt_{_tag(sf_dir, 'embeddings')}"
+    tbl = f"emb_cells_bkt_{fixture_fingerprint(sf_dir, ('embeddings',), 'emb_cells_bkt')}"
     if spark.catalog.tableExists(tbl):
         return spark.table(tbl)
     assign = _cell_assignment(spark, sf_dir)
@@ -162,7 +131,7 @@ def _cell_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             assign.write.bucketBy(8, "cell")
             .sortBy("cell", "vec_id")
-            .option("path", _scratch_dir("bkt_cells_"))
+            .option("path", scratch_dir("bkt_cells_"))
             .saveAsTable(tbl)
         )
         return spark.table(tbl)
@@ -213,6 +182,19 @@ def scale_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _events_by_date(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`events` rewritten once per fixture version as date-partitioned
+    parquet (`event_date=.../`), read back with a date partition column."""
+
+    def build(d: str) -> None:
+        load_table(spark, sf_dir, "events").withColumn(
+            "event_date", F.col("ts").cast("date")
+        ).write.mode("overwrite").partitionBy("event_date").parquet(d)
+
+    d = fixture_cache(sf_dir, ("events",), "events_by_date", build)
+    return spark.read.parquet(d).withColumn("event_date", F.col("event_date").cast("date"))
+
+
 @register(
     "scale_partitioned_scan_pruned",
     oracle=f"""
@@ -241,31 +223,14 @@ def scale_partitioned_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame
     runtime subquery (the same reason a real pipeline templates its date
     literals into the query). Oracle states the identical logical result
     over the unpartitioned fixture."""
-    tag = _tag(sf_dir, "events")
-    d = os.path.join(tempfile.gettempdir(), f"events_by_date_{tag}")
-    marker = os.path.join(d, "_LAYOUT_COMPLETE")
-    if not os.path.exists(marker):
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "event_date", F.col("ts").cast("date")
-        )
-        ev.write.mode("overwrite").partitionBy("event_date").parquet(d)
-        with open(marker, "w") as f:
-            f.write("ok")
-        if not _SCRATCH:
-            atexit.register(
-                lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH]
-            )
-        _SCRATCH.append(d)
     cutoff = (
         load_table(spark, sf_dir, "events")
         .agg(F.date_add(F.min(F.col("ts").cast("date")), 6).alias("c"))
         .collect()[0]["c"]
     )
-    part = spark.read.parquet(d).withColumn(
-        "event_date", F.col("event_date").cast("date")
-    )
     return (
-        part.filter(F.col("event_date") <= F.lit(cutoff))
+        _events_by_date(spark, sf_dir)
+        .filter(F.col("event_date") <= F.lit(cutoff))
         .groupBy("event_date", "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("total_value"))
     )
@@ -552,21 +517,6 @@ def scale_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFra
     Oracle states the identical join over the unpartitioned fixture.
     Determinism: the above-average test is all-integer
     (buys·n_days > total_buys) on both engines."""
-    tag = _tag(sf_dir, "events")
-    d = os.path.join(tempfile.gettempdir(), f"events_by_date_{tag}")
-    marker = os.path.join(d, "_LAYOUT_COMPLETE")
-    if not os.path.exists(marker):
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "event_date", F.col("ts").cast("date")
-        )
-        ev.write.mode("overwrite").partitionBy("event_date").parquet(d)
-        with open(marker, "w") as f:
-            f.write("ok")
-        if not _SCRATCH:
-            atexit.register(
-                lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH]
-            )
-        _SCRATCH.append(d)
     ev = load_table(spark, sf_dir, "events")
     days = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
@@ -586,11 +536,9 @@ def scale_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFra
     peak = days.filter(F.col("buys") * F.lit(int(nd)) > F.lit(int(tb))).select(
         F.col("d").alias("event_date")
     )
-    fact = spark.read.parquet(d).withColumn(
-        "event_date", F.col("event_date").cast("date")
-    )
     return (
-        fact.join(F.broadcast(peak), "event_date")
+        _events_by_date(spark, sf_dir)
+        .join(F.broadcast(peak), "event_date")
         .groupBy("event_date", "event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -688,3 +636,5 @@ declare_helper_deps(
     _dedup_cells,
     _session_memo,
 )
+for _layout_query in ("scale_partitioned_scan_pruned", "scale_dynamic_partition_pruning"):
+    declare_helper_deps(_layout_query, _events_by_date)

@@ -29,10 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from spark_ibm_mq_spark.operators.projections import EVENTS_CTE
 from spark_ibm_mq_spark.registry import register
 from spark_ibm_mq_spark.streaming.readers import events_file_stream
-from spark_ibm_mq_spark.tables import load_table, session_memo
-
-
-_REPLAY_MEMO: dict[tuple[str, str, str, str | None], str] = {}
+from spark_ibm_mq_spark.session import scratch_dir
+from spark_ibm_mq_spark.tables import fixture_cache, load_table
 
 
 def _replay_src(
@@ -42,17 +40,14 @@ def _replay_src(
     tables: tuple[str, ...],
     order_by: str | None = None,
 ) -> str:
-    """Memoized 4-file parquet export used as a deterministic micro-batch
-    replay source (maxFilesPerTrigger=1 → 4 micro-batches).
+    """4-file parquet export of ``df``, a deterministic micro-batch replay
+    source (maxFilesPerTrigger=1 → 4 micro-batches).
 
-    The export is READ-ONLY derived data identical for every invocation in
-    a session, so it follows the dedup._LABELS_MEMO convention: keyed on
-    (applicationId, fixture fingerprint, op) and built once — re-exporting
-    600 k rows per call was ~35 % of stream_tpch_q1_incremental's wall
-    clock (r10 streaming-family adjudication). Checkpoints and snapshot
-    dirs stay strictly per-call: those ARE the mutable streaming state.
-    The file_sources._tag fingerprint in the key makes a mid-session
-    fixture regeneration rebuild the export.
+    The export is READ-ONLY derived data, identical for every call on one
+    version of ``tables``, so `fixture_cache` builds it once under ``key``:
+    re-exporting 600 k rows per call was ~35 % of
+    stream_tpch_q1_incremental's wall clock. Checkpoints and snapshot dirs
+    stay strictly per-call: those ARE the mutable streaming state.
 
     ``order_by``: when set (e.g. "ts"), the export is range-partitioned on
     that column so file part-0000i holds the i-th ascending range, and the
@@ -63,17 +58,14 @@ def _replay_src(
     and keeps a watermark from dropping genuinely-owed rows. Required by
     any watermarked consumer; the unordered default is only for consumers
     with no late-data semantics (the foreachBatch merges)."""
-    from spark_ibm_mq_spark.operators.file_sources import _tag
-    from spark_ibm_mq_spark.operators.mq_source import _scratch
 
-    def build():
-        out = os.path.join(_scratch(f"replay_{key}_"), "src")
+    def build(out: str) -> None:
         part = (
             df.repartitionByRange(4, order_by)
             if order_by
             else df.repartition(4)
         )
-        part.write.parquet(out)
+        part.write.mode("overwrite").parquet(out)
         if order_by:
             import time as _time
 
@@ -85,19 +77,9 @@ def _replay_src(
                 )
             ):
                 os.utime(os.path.join(out, f), (base + 10 * i, base + 10 * i))
-        return out
 
-    return session_memo(
-        _REPLAY_MEMO,
-        (
-            df.sparkSession.sparkContext.applicationId,
-            _tag(sf_dir, tables),
-            key,
-            order_by,
-        ),
-        build,
-        valid=lambda d: os.path.exists(os.path.join(d, "_SUCCESS")),
-    )
+    name = f"replay_{key}" + (f"_by_{order_by}" if order_by else "")
+    return fixture_cache(sf_dir, tables, name, build)
 
 
 def run_snapshot_merge_stream(
@@ -202,10 +184,10 @@ def _run_to_memory(
     so partition count is a latency/parallelism dial, not free: the fixture
     streams are thousands of rows, where 32 stores per operator is pure
     overhead. 4 here (an interleaved family A/B at sf0.1 measured 8→4 as
-    −8%, r9); a real deployment sizes this to cores × state volume
+    −8%); a real deployment sizes this to cores × state volume
     (the partition count is baked into the checkpoint on first run).
 
-    The checkpoint is explicit ephemeral scratch (`_scratch`, removed at
+    The checkpoint is explicit ephemeral scratch (`scratch_dir`, removed at
     interpreter exit) rather than the temp checkpoint Spark would leave
     under java.io.tmpdir. Its file system barely matters for speed: ext4
     and tmpfs write checkpoint files within 10% of each other. The
@@ -215,8 +197,6 @@ def _run_to_memory(
     production query replaces this with a durable HDFS/S3 checkpoint —
     recovery semantics need it; a drain that returns within the call does
     not."""
-    from spark_ibm_mq_spark.operators.mq_source import _scratch
-
     spark = stream_df.sparkSession
     name = f"sink_{uuid.uuid4().hex[:12]}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -226,7 +206,7 @@ def _run_to_memory(
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(mode)
-            .option("checkpointLocation", os.path.join(_scratch("stream_ckpt_"), "ckpt"))
+            .option("checkpointLocation", os.path.join(scratch_dir("stream_ckpt_"), "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -728,9 +708,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncommitted one overwrites its own partial output."""
     import os
 
-    from spark_ibm_mq_spark.operators.mq_source import _scratch
-
-    d = _scratch("fb_upsert_")
+    d = scratch_dir("fb_upsert_")
     ev = load_table(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
@@ -876,9 +854,7 @@ def stream_cdc_merge_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame
     the one-shot batch apply — the oracle IS `mq_cdc_apply`'s."""
     import os
 
-    from spark_ibm_mq_spark.operators.mq_source import _scratch
-
-    d = _scratch("fb_cdc_")
+    d = scratch_dir("fb_cdc_")
     ev = load_table(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
@@ -1002,9 +978,7 @@ def stream_tpch_q1_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from spark_ibm_mq_spark.operators.flagship import _CUTOFF
-    from spark_ibm_mq_spark.operators.mq_source import _scratch
-
-    d = _scratch("fb_q1_")
+    d = scratch_dir("fb_q1_")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_linestatus",
@@ -1323,9 +1297,7 @@ def stream_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤|days| rows before touching the snapshot; snapshot commits are
     batch_id-keyed (idempotent under foreachBatch's at-least-once
     replay)."""
-    from spark_ibm_mq_spark.operators.mq_source import _scratch
-
-    d = _scratch("fb_cusum_")
+    d = scratch_dir("fb_cusum_")
     ev = load_table(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("ts")
     )
@@ -1397,9 +1369,7 @@ def stream_ks_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot; snapshot commits are batch_id-keyed (idempotent under
     foreachBatch's at-least-once replay)."""
     from spark_ibm_mq_spark.operators.aggregations import ks_drift_from_counts
-    from spark_ibm_mq_spark.operators.mq_source import _scratch
-
-    d = _scratch("fb_ksdrift_")
+    d = scratch_dir("fb_ksdrift_")
     docs = load_table(spark, sf_dir, "documents").select("source", "n_chars")
     src = _replay_src(docs, "doc_ksdrift", sf_dir, ("documents",))
 
@@ -1451,13 +1421,12 @@ def stream_dsir_model_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     are batch_id-keyed (idempotent under foreachBatch's at-least-once
     replay)."""
     from spark_ibm_mq_spark.functions.text import tokens
-    from spark_ibm_mq_spark.operators.mq_source import _scratch
     from spark_ibm_mq_spark.operators.pipeline import (
         _DSIR_BUCKET,
         dsir_scores_from_bucket_counts,
     )
 
-    d = _scratch("fb_dsir_")
+    d = scratch_dir("fb_dsir_")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -1519,12 +1488,11 @@ def stream_temperature_mixture_update(
     touching the snapshot — the merge shuffle carries one row per
     source, never documents; snapshot commits are batch_id-keyed
     (idempotent under foreachBatch's at-least-once replay)."""
-    from spark_ibm_mq_spark.operators.mq_source import _scratch
     from spark_ibm_mq_spark.operators.pipeline import (
         temperature_mixture_from_counts,
     )
 
-    d = _scratch("fb_tempmix_")
+    d = scratch_dir("fb_tempmix_")
     docs = load_table(spark, sf_dir, "documents").select("source")
     src = _replay_src(docs, "doc_tempmix", sf_dir, ("documents",))
 
@@ -1575,17 +1543,3 @@ for _ivm_twin in (
     "stream_temperature_mixture_update",
 ):
     declare_helper_deps(_ivm_twin, run_snapshot_merge_stream, additive_merge)
-
-# every _replay_src consumer declares the session_memo engine its export
-# memo delegates to (census-enforced; see dedup.py's declaration comment)
-for _replay_consumer in (
-    "stream_foreachbatch_upsert",
-    "stream_cdc_merge_with_deletes",
-    "stream_tpch_q1_incremental",
-    "stream_windowed_topk_update",
-    "stream_cusum_monitor",
-    "stream_ks_drift_monitor",
-    "stream_dsir_model_update",
-    "stream_temperature_mixture_update",
-):
-    declare_helper_deps(_replay_consumer, session_memo)

@@ -9,7 +9,9 @@ and would be raised (or left to AQE) at cluster scale.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
@@ -95,8 +97,9 @@ def get_spark(app_name: str = "spark-ibm-mq-spark", shuffle_partitions: int | No
 
 
 def scratch_base() -> str:
-    """Base dir for per-call EPHEMERAL scratch (stream checkpoints, replay
-    sources, sink outputs that live only for one query invocation).
+    """Base dir for EPHEMERAL scratch: per-call stream checkpoints and sink
+    outputs that live only for one query invocation, and the derived
+    fixtures of `tables.fixture_cache` that live until the process exits.
 
     Prefers tmpfs (/dev/shm) when present: these dirs are created and
     discarded within a single call, so durability buys nothing and they
@@ -111,7 +114,7 @@ def scratch_base() -> str:
     SPARK_GRAFT_SCRATCH; falls back to the system tempdir.
 
     tmpfs is typically capped at RAM/2: at larger scale factors the
-    memoized replay exports plus per-call checkpoints could exhaust it
+    fixture caches plus per-call checkpoints could exhaust it
     mid-bench with a confusing ENOSPC deep inside Spark, so /dev/shm is
     only chosen while it still has a conservative free floor (2 GiB, an
     order of magnitude above the sf0.1 scratch footprint); below that
@@ -129,3 +132,24 @@ def scratch_base() -> str:
         except OSError:
             pass
     return tempfile.gettempdir()
+
+
+# Directories removed when the interpreter exits (see `scratch_dir`).
+_REMOVE_AT_EXIT: list[str] = []
+atexit.register(lambda: [shutil.rmtree(d, ignore_errors=True) for d in _REMOVE_AT_EXIT])
+
+
+def remove_at_exit(path: str) -> str:
+    """Have ``path`` removed, with everything under it, at interpreter exit."""
+    _REMOVE_AT_EXIT.append(path)
+    return path
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory under `scratch_base()`, removed at interpreter exit.
+
+    Queries return lazy frames that read these directories after the call
+    returns, so the removal has to outlive the call: a ``finally`` would
+    delete a sink before its result is read, and no removal at all leaks
+    one broker copy and one sink per call across repeated runs."""
+    return remove_at_exit(tempfile.mkdtemp(prefix=prefix, dir=scratch_base()))

@@ -51,11 +51,8 @@ implement.
 
 from __future__ import annotations
 
-import atexit
 import itertools
 import os
-import shutil
-import tempfile
 import threading
 import time
 
@@ -67,7 +64,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from spark_ibm_mq_spark.session import scratch_base
+from spark_ibm_mq_spark.session import scratch_dir
 from spark_ibm_mq_spark.sources.fake_mq import FakeMQBroker
 
 SCHEMA = "key string, value string, put_ts timestamp_ntz, seq_no bigint, queue string"
@@ -237,9 +234,19 @@ class _Options:
         if not self.path:
             raise ValueError("ibmmq source requires option 'path' (broker directory)")
         self.queue: str = get("queue", "DEV.QUEUE.1")
-        # browse (non-destructive) vs destructive GET — IBMMQReceiver.java:131-136
-        self.keep_messages: bool = str(get("keepmessages", "true")).lower() == "true"
+        # browse (non-destructive) vs destructive GET — IBMMQReceiver.java:131-136.
+        # Only true/false: reading any other spelling as false would turn a
+        # browse into a GET that acks the messages away.
+        keep = str(get("keepmessages", "true"))
+        if keep.lower() not in ("true", "false"):
+            raise ValueError(f"ibmmq option 'keepMessages' must be true or false, got {keep!r}")
+        self.keep_messages: bool = keep.lower() == "true"
+        # a batch of 0 messages would leave the stream stalled with no error
         self.max_per_batch: int = int(get("maxmessagesperbatch", "5000"))
+        if self.max_per_batch < 1:
+            raise ValueError(
+                f"ibmmq option 'maxMessagesPerBatch' must be >= 1, got {self.max_per_batch}"
+            )
         self.halt_file: str | None = get("haltfile")
         # body decode: either a Python codec name ('encoding') or an IBM MQ
         # numeric CCSID ('ccsid', IBMMQReceiver.java:95,242-244 — the
@@ -480,14 +487,12 @@ _REGISTER_LOCK = threading.Lock()
 
 
 def _package_zip(app_id: str) -> str:
-    """Zip the package's sources into a directory of this application's own
-    under ``scratch_base()``, removed at interpreter exit."""
+    """Zip the package's sources into a `scratch_dir` of this application's
+    own."""
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    d = tempfile.mkdtemp(prefix=f"ibmmq_pkg_{app_id}_", dir=scratch_base())
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    zip_path = os.path.join(d, "spark_ibm_mq_spark_pkg.zip")
+    zip_path = os.path.join(scratch_dir(f"ibmmq_pkg_{app_id}_"), "spark_ibm_mq_spark_pkg.zip")
     with zipfile.ZipFile(zip_path, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:

@@ -8,11 +8,17 @@ parquet relation directly (``PushedFilters``/``ReadSchema`` in explain).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from spark_ibm_mq_spark.session import remove_at_exit, scratch_base
 
 TABLES = (
     "region",
@@ -75,6 +81,51 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
+
+
+def fixture_fingerprint(sf_dir: str, tables: tuple[str, ...], name: str) -> str:
+    """Key of the data ``name`` derives from ``tables`` of ``sf_dir``: the
+    fixture path, the size and mtime of each named parquet file, and
+    ``name`` itself. The path alone is not enough: a fixture regenerated at
+    the same path would be served a stale derived copy while the oracle
+    reads the fresh parquet (SCALE.md §9). A missing table raises."""
+    parts = [name, os.path.abspath(sf_dir)]
+    for t in tables:
+        st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
+        parts.append(f"{t}|{st.st_size}|{st.st_mtime_ns}")
+    return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
+
+
+def fixture_cache(
+    sf_dir: str, tables: tuple[str, ...], name: str, build: Callable[[str], None]
+) -> str:
+    """The directory holding data derived from ``tables`` of ``sf_dir``,
+    built by ``build(dir)`` once per fixture version.
+
+    ``build`` fills a private temp directory beside the cache path, which
+    is then renamed into place; the rename is atomic, so the cache path
+    either does not exist or holds a complete build. When two callers
+    build at once, the later rename fails on the winner's non-empty
+    directory and the loser drops its own copy. A ``build`` that raises
+    leaves nothing behind. The process that publishes a cache removes it
+    at exit. Because ``name`` is part of the key, no cache path can equal
+    a directory of another layout that a crash left half-written."""
+    parent = scratch_base()
+    final = os.path.join(parent, f"{name}_{fixture_fingerprint(sf_dir, tables, name)}")
+    if os.path.isdir(final):
+        return final
+    tmp = tempfile.mkdtemp(prefix=f".{os.path.basename(final)}.", dir=parent)
+    try:
+        build(tmp)
+        try:
+            os.rename(tmp, final)
+        except OSError:
+            if not os.path.isdir(final):
+                raise
+            return final
+        return remove_at_exit(final)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _parse_byte_conf(value: str) -> int:

@@ -698,14 +698,38 @@ def test_dlq_routes_corrupt_bodies(spark, tmp_path):
     assert rows[("dlq", "parse_error")] == (2, 3, 4)
 
 
+@pytest.mark.parametrize(
+    "opts, match",
+    [
+        ({"keepmessages": "yes"}, "keepMessages"),
+        ({"keepmessages": "1"}, "keepMessages"),
+        ({"keepmessages": ""}, "keepMessages"),
+        ({"maxmessagesperbatch": "0"}, "maxMessagesPerBatch"),
+        ({"maxmessagesperbatch": "-5"}, "maxMessagesPerBatch"),
+    ],
+)
+def test_options_that_would_silently_change_behaviour_are_rejected(opts, match):
+    """A misspelt keepMessages would read as false and turn a browse into a
+    destructive GET; a batch cap of 0 would stall the stream with no error.
+    Both must fail at reader creation, naming the option."""
+    from spark_ibm_mq_spark.sources.mq import _Options
+
+    with pytest.raises(ValueError, match=match):
+        _Options({"path": "/unused", **opts})
+    for keep in ("TRUE", "False"):
+        assert _Options({"path": "/unused", "keepmessages": keep}).keep_messages is (
+            keep.lower() == "true"
+        )
+
+
 # ------------------------------------------------------- fixture cache safety
 
 
 def test_broker_fixture_rebuilds_when_events_regenerated(tmp_path):
     """Regenerating events.parquet at the same path must rebuild the broker
-    queue (ADVICE r9 / VERDICT r9 task 3): the cache key is the size+mtime
-    fingerprint of the source parquet, not the path alone — a stale queue
-    here would silently diverge from the fresh parquet the oracle reads."""
+    queue: the cache key is the size+mtime fingerprint of the source
+    parquet, not the path alone — a stale queue here would silently diverge
+    from the fresh parquet the oracle reads."""
     import duckdb
 
     from spark_ibm_mq_spark.operators.mq_source import _QUEUE, _broker_dir_for
